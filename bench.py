@@ -1,6 +1,7 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS]; prints ONE JSON line with per-query seconds and
-the headline rolled-up-points/sec metric. Times are the MEDIAN of
+local[$SPARK_GRAFT_CPUS] (default: the cores this process may use);
+prints ONE JSON line with per-query seconds and the headline
+rolled-up-points/sec metric. Times are the MEDIAN of
 $SPARK_GRAFT_BENCH_RUNS (default 3) full-suite repetitions after one
 discarded warmup pass, with per-query min/max spread — a single run on a
 shared box is noise, not signal (VERDICT r02).
@@ -191,7 +192,6 @@ def _scaling_summary(out: dict, lo: str, hi: str, ratio: float,
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     n_convs = int(os.environ.get("SPARK_GRAFT_SCALE_CONVS", "1000000"))
 
@@ -253,7 +253,7 @@ def main() -> None:
     # report the per-query MEDIAN plus min/max spread so the recorded
     # number is a statistic, not a sample.
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    spark = build_session("bench", master=f"local[{cpus}]")
+    spark = build_session("bench")
     run_once(spark, sf_dir, BENCH_QUERIES)  # warmup, discarded
     runs: list[dict[str, float]] = []
     totals: list[float] = []

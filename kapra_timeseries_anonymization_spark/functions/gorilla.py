@@ -15,9 +15,9 @@ leading/trailing-zero windows and the final variable-width bit packing
 are all array ops; the only Python loop is the value-window state machine
 over NONZERO-xor points, and it only RECORDS new-window positions (the
 per-point reuse/shift/width arrays are derived vectorized from those
-events). It runs inside `applyInPandas` per chunk (operators/chunks.py),
-so at 100 TB the parallelism unit is the chunk key and per-core
-throughput is the numpy kernel's (measured ~5-6x encode / ~2x decode vs
+events). It runs inside a grouped `applyInArrow` call per chunk
+(operators/chunks.py), so at 100 TB the parallelism unit is the chunk key
+and per-core throughput is the numpy kernel's (measured ~5-6x encode / ~2x decode vs
 the r01 per-point loop on this sandbox, byte-identical output; see
 BENCH.md for the head-to-head microbench).
 

@@ -4,12 +4,14 @@ Chunk row = (keys..., tier, chunk_idx, t_start, t_end, n_points, n_bytes,
 payload:binary, watermark:timestamp) — the storage unit of the retention
 engine (BASELINE north_star: "per-partition byte-array chunk structs").
 
-Scale/skew stance: the applyInPandas group key is (keys..., chunk_idx)
-where chunk_idx is a tumbling time bucket — a pathologically long
-conversation is split across many bounded chunks instead of one giant
-group, so no salting is needed here (the time axis IS the salt). Sorting
-happens inside each bounded group. Decompression is mapInPandas (pure
-per-chunk fan-out, no shuffle at all).
+Compression is a grouped Arrow UDF: each (keys..., chunk_idx) group
+reaches Python as one `pyarrow.Table`, is sorted by (ts, value) in numpy
+and encoded by `encode_chunk`, with no pandas frame per chunk.
+
+Scale/skew stance: chunk_idx is a tumbling time bucket, so a pathologically
+long conversation is split across many bounded chunks instead of one giant
+group and no salting is needed here (the time axis IS the salt).
+Decompression is mapInPandas (pure per-chunk fan-out, no shuffle at all).
 """
 
 from __future__ import annotations
@@ -18,9 +20,11 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions.gorilla import decode_chunk, encode_chunk
 
@@ -69,25 +73,25 @@ def compress_chunks(
          T.StructField("watermark", T.TimestampType())]
     )
 
-    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["_ts_us", "_v"], kind="mergesort")
-        ts = pdf["_ts_us"].to_numpy(np.int64)
-        vals = pdf["_v"].to_numpy(np.float64)
-        payload = encode_chunk(ts, vals)
-        row = {k: pdf.iloc[0][k] for k in keys}
-        row.update(
-            tier=tier,
-            chunk_idx=int(pdf.iloc[0]["chunk_idx"]),
-            t_start=int(ts[0]),
-            t_end=int(ts[-1]),
-            n_points=len(ts),
-            n_bytes=len(payload),
-            payload=payload,
-            watermark=pd.Timestamp(int(ts[-1]), unit="us"),
-        )
-        return pd.DataFrame([row], columns=[f.name for f in out_schema.fields])
+    group = [*keys, "chunk_idx"]
+    arrow_schema = to_arrow_schema(out_schema)
 
-    return src.groupBy(*keys, "chunk_idx").applyInPandas(encode, out_schema)
+    def encode(key: tuple, table: pa.Table) -> pa.Table:
+        ts = table.column("_ts_us").to_numpy()
+        vals = table.column("_v").to_numpy()  # nulls -> NaN
+        # (ts, value) order, NaN last: the payload bytes depend on it
+        order = np.lexsort((vals, ts))
+        ts, vals = ts[order], vals[order]
+        payload = encode_chunk(ts, vals)
+        row = {c: k.as_py() for c, k in zip(group, key)}
+        row.update(
+            tier=tier, t_start=int(ts[0]), t_end=int(ts[-1]),
+            n_points=len(ts), n_bytes=len(payload), payload=payload,
+            watermark=int(ts[-1]),
+        )
+        return pa.Table.from_pylist([row], schema=arrow_schema)
+
+    return src.groupBy(*group).applyInArrow(encode, out_schema)
 
 
 def decompress_chunks(

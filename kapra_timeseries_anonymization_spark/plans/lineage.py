@@ -23,9 +23,14 @@ Resume contract:
   between data-commit and lineage-append can only cause a redundant
   (idempotent) rewrite, never a missing or doubled partition.
 
-Scale: the incremental filter is an anti-join of the source against the
-tiny completed-partition set (broadcast); on Iceberg it becomes partition
-pruning via `WHERE p_date NOT IN (...)`, i.e. file skipping, not a scan.
+Scale: each call reads the lineage log once (schema declared, no
+inference job) and collects every tier's completed partition keys to the
+driver: one small row per (tier, day), so thousands of days stay far below
+driver memory. The incremental filter is then a plain `p_date` predicate,
+which the optimizer pushes below the rollup's aggregate, so completed days
+are dropped before the shuffle; on Iceberg the same predicate is partition
+pruning, i.e. file skipping, not a scan. Lineage rows are appended from an
+Arrow table built on the driver, so no Python worker touches them.
 
 Iceberg status (r02 attempt, documented per VERDICT r01 #6): executing
 the real Iceberg branch requires the `iceberg-spark-runtime` jar; this
@@ -39,7 +44,7 @@ late-partition incremental appends. Production mapping, 1:1:
   - `todo.write.mode("overwrite").partitionBy("p_date").parquet(path)`
     -> `todo.writeTo(tbl).overwritePartitions()` (snapshot-isolated)
   - lineage parquet append -> append to an Iceberg metadata table
-  - completed-partition anti-join -> metadata-table scan + partition
+  - completed-partition filter -> metadata-table scan + partition
     pruning on the tier table.
 """
 
@@ -47,6 +52,8 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -64,33 +71,35 @@ def _lineage_path(base_dir: str) -> str:
 
 
 def read_lineage(spark: SparkSession, base_dir: str) -> DataFrame:
-    p = _lineage_path(base_dir)
+    """The lineage log; raises ``AnalysisException`` (PATH_NOT_FOUND)
+    before the first append."""
+    return spark.read.schema(LINEAGE_SCHEMA).parquet(_lineage_path(base_dir))
+
+
+def _completed_keys(spark: SparkSession, base_dir: str) -> dict[str, set[str]]:
+    """{tier: partition keys with a lineage row}, read in one job. A null
+    key (rows with a null timestamp) is never complete: those rows are
+    rewritten on every run, so it is left out."""
     try:
-        return spark.read.parquet(p)
-    except Exception:
-        return spark.createDataFrame([], LINEAGE_SCHEMA)
+        log = read_lineage(spark, base_dir)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return {}
+    done: dict[str, set[str]] = {}
+    for tier, key in log.select("tier", "partition_key").collect():
+        if key is not None:
+            done.setdefault(tier, set()).add(key)
+    return done
 
 
-def completed_partitions(
-    spark: SparkSession, base_dir: str, tier: str
-) -> DataFrame:
-    return (
-        read_lineage(spark, base_dir)
-        .filter(F.col("tier") == tier)
-        .select("partition_key")
-        .distinct()
-    )
-
-
-def _append_lineage(
-    spark: SparkSession,
-    base_dir: str,
-    tier: str,
-    written: DataFrame,
-    run_id: str,
-) -> int:
-    """One lineage row per just-written partition: watermark = max bucket,
-    row_count, metric_sum (sum_value accumulator)."""
+def _lineage_rows(written: DataFrame, tier: str, run_id: str) -> pa.Table:
+    """One lineage row per partition of ``written``: watermark = max bucket,
+    row_count, metric_sum (sum_value accumulator). Tiny (one row per
+    partition), so ``collect`` brings it to the driver; unlike ``toArrow``,
+    it runs no job when AQE has already proven the result empty (a no-op
+    resume). Returned as an Arrow table, which Spark reads without
+    Python workers."""
     rows = (
         written.groupBy(F.col("p_date").alias("partition_key"))
         .agg(
@@ -106,13 +115,9 @@ def _append_lineage(
             "metric_sum",
             F.lit(run_id).alias("run_id"),
         )
+        .collect()
     )
-    out = rows.collect()  # tiny: one row per partition
-    if out:
-        spark.createDataFrame(out, LINEAGE_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(_lineage_path(base_dir))
-    return len(out)
+    return pa.Table.from_pylist([r.asDict() for r in rows])
 
 
 def read_tier(spark: SparkSession, base_dir: str, tier: str) -> DataFrame:
@@ -142,6 +147,7 @@ def materialize_cascade(
     Returns {tier: n_partitions_written} — all zeros on a no-op resume.
     """
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    done = _completed_keys(spark, base_dir) if resume else {}
     written_counts: dict[str, int] = {}
     prev: DataFrame | None = None
     for tier in tiers:
@@ -151,27 +157,30 @@ def materialize_cascade(
         else:
             cur = rollup_tier(prev, keys, sec)
         cur = cur.withColumn("p_date", F.to_date("bucket").cast("string"))
-
-        if resume:
-            done = completed_partitions(spark, base_dir, tier)
-            todo = cur.join(
-                F.broadcast(done),
-                cur.p_date == done.partition_key,
-                "left_anti",
+        if done.get(tier):
+            # null p_date is kept, as a null never matches a completed key;
+            # None stays out of the list, where it would null every miss
+            cur = cur.filter(
+                F.col("p_date").isNull()
+                | ~F.col("p_date").isin(sorted(done[tier]))
             )
-        else:
-            todo = cur
 
         tier_path = os.path.join(base_dir, tier)
-        # localCheckpoint: the tier is both written AND the next tier's
-        # input; materializing once avoids recomputing the whole upstream
-        # cascade per tier and truncates lineage for the driver loop
-        todo = todo.localCheckpoint(eager=True)
-        n_parts = todo.select("p_date").distinct().count()
-        if n_parts:
-            todo.write.mode("overwrite").partitionBy("p_date").parquet(tier_path)
-            _append_lineage(spark, base_dir, tier, todo, run_id)
-        written_counts[tier] = n_parts
-        # next tier reads the STORED table: resumed runs see old+new rows
-        prev = read_tier(spark, base_dir, tier).drop("p_date")
+        # localCheckpoint: the tier is both summarized for lineage AND
+        # written; materializing it once (in the lineage job) avoids
+        # computing its rollup twice
+        todo = cur.localCheckpoint(eager=False)
+        lineage = _lineage_rows(todo, tier, run_id)
+        if lineage.num_rows:
+            todo.write.mode("overwrite").partitionBy("p_date").parquet(
+                tier_path
+            )
+            # appended only AFTER the data write commits (resume contract)
+            spark.createDataFrame(lineage, LINEAGE_SCHEMA).coalesce(
+                1
+            ).write.mode("append").parquet(_lineage_path(base_dir))
+        written_counts[tier] = lineage.num_rows
+        # next tier reads the STORED table (resumed runs see old+new rows),
+        # with the schema just written, so no inference job runs
+        prev = spark.read.schema(todo.schema).parquet(tier_path).drop("p_date")
     return written_counts

@@ -49,13 +49,20 @@ _BLAS_PIN = {
 }
 
 
+def default_cpus() -> int:
+    """Local slots: ``SPARK_GRAFT_CPUS`` when set, else the cores this
+    process may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
+
+
 def build_session(
     app_name: str = "kapra-ts-engine",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     for k, v in _BLAS_PIN.items():
         # local mode: python workers inherit the driver process env
         os.environ.setdefault(k, v)

@@ -120,3 +120,44 @@ def test_chunk_splits_long_key(spark):
     rows = chunks.collect()
     assert len(rows) > 10  # 1000 minutes / 60-min chunks
     assert sum(r["n_points"] for r in rows) == 1000
+
+
+def test_spark_chunks_across_arrow_batch_boundaries(spark):
+    """With 7-row Arrow batches every chunk straddles batches: each payload
+    must equal encode_chunk of that chunk's points sorted by (ts, value),
+    and no chunk may be split at a batch boundary."""
+    rng = np.random.default_rng(7)
+    n = 600
+    k1 = np.concatenate([rng.choice(["a", "b"], n), ["c"]])
+    k2 = np.concatenate([rng.integers(0, 3, n), [9]])
+    # a 20-minute grid over two hours: many tied timestamps per chunk
+    ts = np.concatenate([rng.integers(0, 6, n), [2]]) * 1_200_000_000
+    vals = np.concatenate([rng.integers(0, 4, n), [1]]).astype(float)
+    vals[::37] = np.nan  # sorts after every number, as in numpy
+    pdf = pd.DataFrame({"k1": k1, "k2": k2,
+                        "ts": pd.to_datetime(ts, unit="us"), "value": vals})
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "7")
+    try:
+        rows = compress_chunks(
+            spark.createDataFrame(pdf), ["k1", "k2"], "ts", "value",
+            chunk_interval_sec=3600,
+        ).collect()
+    finally:
+        spark.conf.set(conf, old)
+
+    got = {(r["k1"], r["k2"], r["chunk_idx"]): r for r in rows}
+    assert len(got) == len(rows)
+    groups = pd.DataFrame({"k1": k1, "k2": k2, "c": ts // 3_600_000_000})
+    expected = groups.groupby(["k1", "k2", "c"]).indices
+    assert got.keys() == expected.keys()
+    for key, idx in expected.items():
+        o = np.lexsort((vals[idx], ts[idx]))
+        t, v = ts[idx][o], vals[idx][o]
+        r = got[key]
+        assert bytes(r["payload"]) == encode_chunk(t, v)
+        assert (r["t_start"], r["t_end"], r["n_points"]) == (
+            t[0], t[-1], len(t))
+    assert max(r["n_points"] for r in rows) > 3 * 7 and min(
+        r["n_points"] for r in rows) == 1

@@ -213,3 +213,52 @@ def test_late_partition_appended_incrementally(spark, events, tmp_path):
             _tier_pdf(spark, base, tier), _direct_pdf(events, tier),
             check_dtype=False,
         )
+
+
+def test_null_timestamps_on_fresh_run_and_resume(spark, events, tmp_path):
+    """Rows with a null timestamp roll up into a null bucket and land in
+    the null p_date partition. A null key never counts as complete, so
+    every run rewrites that one partition in place (no duplicate rows),
+    while a resume skips every completed day."""
+    base = str(tmp_path / "tiers")
+    nulls = events.filter(F.col("event_id") % 100 == 0).withColumn(
+        "ts", F.lit(None).cast(events.schema["ts"].dataType)
+    )
+    assert nulls.count() > 0
+    src = events.unionByName(nulls)
+    n_days = events.select(F.to_date("ts")).distinct().count()
+    fresh = materialize_cascade(spark, src, base, ["event_type"], "ts", "value")
+    assert fresh == {"1m": n_days + 1, "1h": n_days + 1, "1d": n_days + 1}
+    again = materialize_cascade(
+        spark, src, base, ["event_type"], "ts", "value", run_id="resume"
+    )
+    assert again == {"1m": 1, "1h": 1, "1d": 1}
+    for tier in ("1m", "1h", "1d"):
+        pd.testing.assert_frame_equal(
+            _tier_pdf(spark, base, tier), _direct_pdf(src, tier),
+            check_dtype=False,
+        )
+    lin = read_lineage(spark, base).toPandas()
+    assert (lin.partition_key.isna().groupby(lin.tier).sum() == 2).all()
+
+
+def test_cascade_job_counts(spark, events, tmp_path):
+    """Spark jobs per call, read with the job group's tracker: a fresh
+    3-tier cascade runs 15 and a no-op resume 4 (the lineage read plus
+    one empty rollup per tier); the bounds leave headroom for AQE."""
+    base = str(tmp_path / "tiers")
+    sc = spark.sparkContext
+    jobs = {}
+    for run_id in ("fresh", "resume"):
+        sc.setJobGroup(f"cascade-{run_id}", run_id)
+        try:
+            materialize_cascade(
+                spark, events, base, ["event_type"], "ts", "value",
+                run_id=run_id,
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs[run_id] = len(sc.statusTracker().getJobIdsForGroup(
+            f"cascade-{run_id}"))
+    assert jobs["fresh"] <= 20 and jobs["resume"] <= 6, jobs

@@ -20,6 +20,22 @@ import os
 import subprocess
 import sys
 
+import pytest
+
+
+def _sum(value: float):
+    """A float sum (or an average of one) compared within 1e-9 relative:
+    it adds in an order that depends on the partitioning, so its last bits
+    may differ between deployments. Rounding both sides is no fix, since
+    two sums one ulp apart can round to different digits."""
+    return pytest.approx(value, rel=1e-9, abs=1e-12)
+
+
+def _with_sum_averages(result: dict) -> dict:
+    return {**result, "avg_vl": _sum(result["avg_vl"]),
+            "avg_pl": _sum(result["avg_pl"])}
+
+
 _JOB = r"""
 import json, sys
 from kapra_timeseries_anonymization_spark.session import build_session
@@ -38,8 +54,8 @@ rows = sorted(
 print("RESULT " + json.dumps({
     "n": len(rows),
     "groups": len(res.groups),
-    "avg_vl": round(res.avg_vl, 6),
-    "avg_pl": round(res.avg_pl, 6),
+    "avg_vl": res.avg_vl,
+    "avg_pl": res.avg_pl,
     "rows": rows,
 }))
 spark.stop()
@@ -65,7 +81,7 @@ def _run(master: str) -> dict:
 def test_flagship_identical_across_deployment_modes():
     single = _run("local[4]")
     multi = _run("local-cluster[2,2,2048]")
-    assert multi == single
+    assert multi == _with_sum_averages(single)
     assert multi["n"] > 0 and multi["groups"] >= 1
 
 
@@ -96,8 +112,8 @@ rows = sorted(
 print("RESULT " + json.dumps({
     "n": len(rows),
     "groups": res.n_groups,
-    "avg_vl": round(res.avg_vl, 6),
-    "avg_pl": round(res.avg_pl, 6),
+    "avg_vl": res.avg_vl,
+    "avg_pl": res.avg_pl,
     "rows": rows,
 }))
 spark.stop()
@@ -121,10 +137,11 @@ def _run_naive(master: str) -> dict:
 def test_naive_r05_paths_identical_across_deployment_modes():
     """The r05 Mondrian paths (head-rank range exchange, in-task
     local-finish applyInPandas, per-round eager localCheckpoints) on
-    real separate executor JVMs must match single-JVM output exactly."""
+    real separate executor JVMs must match single-JVM output (the float
+    averages to 1e-9 relative)."""
     single = _run_naive("local[4]")
     multi = _run_naive("local-cluster[2,2,2048]")
-    assert multi == single
+    assert multi == _with_sum_averages(single)
     assert multi["n"] == 3000 and multi["groups"] >= 1
 
 
@@ -153,13 +170,13 @@ counts_b = materialize_cascade(
     spark, events, base, ["event_type"], "ts", "value", run_id="run-1")
 
 lineage = sorted(
-    (r["tier"], r["partition_key"], r["row_count"],
-     round(r["metric_sum"], 6), r["run_id"])
+    (r["tier"], r["partition_key"], r["row_count"], r["metric_sum"],
+     r["run_id"])
     for r in read_lineage(spark, base).collect()
 )
 tier_1d = sorted(
-    (r["event_type"], str(r["bucket"]), r["n"], round(r["sum_value"], 6),
-     round(r["min_value"], 6), round(r["max_value"], 6))
+    (r["event_type"], str(r["bucket"]), r["n"], r["sum_value"],
+     r["min_value"], r["max_value"])
     for r in read_tier(spark, base, "1d").collect()
 )
 print("RESULT " + json.dumps({
@@ -190,12 +207,18 @@ def test_lineage_resume_identical_across_deployment_modes(tmp_path):
     analogue (run-0 over the early half of the days, run-1 resuming over
     the full input) must behave identically on real separate executor
     JVMs: same partitions written per run (dynamic partition overwrite +
-    broadcast anti-join against the lineage log crossing block
-    managers), same lineage rows (watermarks/row counts/metric
-    accumulators computed in executor processes), same final 1d tier."""
+    the completed-partition filter from the lineage log), same lineage
+    rows (watermarks/row counts/metric accumulators computed in executor
+    processes), same final 1d tier."""
     single = _run_resume("local[4]", str(tmp_path / "single"))
     multi = _run_resume("local-cluster[2,2,2048]", str(tmp_path / "multi"))
-    assert multi == single
+    # the lineage metric_sum and the 1d sum_value (column 3) are float
+    # sums; everything else, min/max included, must match exactly
+    assert multi == {
+        **single,
+        "lineage": [[*r[:3], _sum(r[3]), *r[4:]] for r in single["lineage"]],
+        "tier_1d": [[*r[:3], _sum(r[3]), *r[4:]] for r in single["tier_1d"]],
+    }
     # the resume actually resumed: run-1 skipped every run-0 partition
     runs = {}
     for tier, pkey, *_rest, run_id in multi["lineage"]:
