@@ -113,48 +113,91 @@ def paa_block(block: np.ndarray, n_segments: int) -> np.ndarray:
     return out
 
 
-def sax_block(block: np.ndarray, level: int, n_segments: int = 4) -> np.ndarray:
-    """SAX words for each row of ``block``; returns object array of str.
+def _sax_codes(pa: np.ndarray, level: int) -> np.ndarray:
+    """Symbol indices (0 == 'a') of a PAA block at one alphabet size.
 
-    level <= 1 (not in the table, < 3) yields ``"a"*n_segments``; level 2 is a
-    genuine binary alphabet; level in (table-miss, >= 3) raises — matching
+    level <= 1 (not in the table, < 3) is all 'a'; level 2 is a genuine
+    binary alphabet; a table miss at level >= 3 raises — matching
     reference sax_utils.py:62-85.
     """
-    block = np.asarray(block, dtype=np.float64)
-    n_rows = block.shape[0]
     if level not in SAX_BREAKPOINTS:
         if level < 3:
-            return np.full(n_rows, "a" * n_segments, dtype=object)
+            return np.zeros(pa.shape, dtype=np.uint8)
         raise ValueError(f"Alphabet size {level} unsupported")
-    zn = znorm_block(block)
-    pa = paa_block(zn, n_segments)
     bps = np.asarray(SAX_BREAKPOINTS[level], dtype=np.float64)
-    idx = np.searchsorted(bps, pa.ravel(), side="left").reshape(pa.shape)
-    letters = np.array([chr(97 + i) for i in range(level)], dtype="<U1")
-    words = letters[idx]
-    return np.array(["".join(r) for r in words], dtype=object)
+    return np.searchsorted(bps, pa, side="left").astype(np.uint8)
+
+
+def _words(codes: np.ndarray) -> np.ndarray:
+    """Object array of SAX words from (n_rows, n_segments) symbol indices,
+    read from one byte buffer instead of a per-row join."""
+    b = np.ascontiguousarray(codes + 97, dtype=np.uint8)
+    w = b.shape[1]
+    return b.view(f"S{w}").ravel().astype(f"U{w}").astype(object)
+
+
+def sax_block(block: np.ndarray, level: int, n_segments: int = 4) -> np.ndarray:
+    """SAX words for each row of ``block``; returns object array of str."""
+    pa = paa_block(znorm_block(block), n_segments)
+    return _words(_sax_codes(pa, level))
 
 
 def sax_all_levels_block(
     block: np.ndarray, levels: list[int], n_segments: int = 4
 ) -> dict[int, np.ndarray]:
     """SAX words at every level in one pass (znorm+PAA computed once)."""
+    pa = paa_block(znorm_block(block), n_segments)
+    return {level: _words(_sax_codes(pa, level)) for level in levels}
+
+
+def sax_pl_levels_block(
+    block: np.ndarray, levels: list[int], n_segments: int = 4,
+    with_pl: bool = True,
+) -> tuple[np.ndarray, np.ndarray | None]:
+    """SAX symbol indices at every level and each row's pattern loss
+    against its OWN word at that level, z-norm and PAA computed once.
+
+    Returns ``codes`` (n_rows, len(levels), n_segments) uint8 and ``pl``
+    (n_rows, len(levels)), or None without ``with_pl``. PL follows KAPRA's
+    policy (reference kapra_anonymization.py:273-280): level < 3 -> 1.0.
+    Otherwise it is :func:`pattern_loss_block` of (row, word, level)
+    without the per-row loop: the reconstruction is ``sax_to_values``'s
+    bin midpoints, each repeated ceil(t / n_segments) times and cut to t,
+    and the dot products are row sums of elementwise products. Those sums
+    depend only on the row, so a record's PL is the same in any batch;
+    they differ from the BLAS dots of :func:`pattern_loss_block` in the
+    last bits only.
+    """
     block = np.asarray(block, dtype=np.float64)
-    n_rows = block.shape[0]
+    n, t = block.shape
     zn = znorm_block(block)
     pa = paa_block(zn, n_segments)
-    out: dict[int, np.ndarray] = {}
-    for level in levels:
-        if level not in SAX_BREAKPOINTS:
-            if level < 3:
-                out[level] = np.full(n_rows, "a" * n_segments, dtype=object)
-                continue
-            raise ValueError(f"Alphabet size {level} unsupported")
-        bps = np.asarray(SAX_BREAKPOINTS[level], dtype=np.float64)
-        idx = np.searchsorted(bps, pa.ravel(), side="left").reshape(pa.shape)
-        letters = np.array([chr(97 + i) for i in range(level)], dtype="<U1")
-        out[level] = np.array(["".join(r) for r in letters[idx]], dtype=object)
-    return out
+    codes = np.empty((n, len(levels), n_segments), dtype=np.uint8)
+    for j, level in enumerate(levels):
+        codes[:, j] = _sax_codes(pa, level)
+    if not with_pl:
+        return codes, None
+    pl = np.ones((n, len(levels)), dtype=np.float64)
+    ii, jj = np.nonzero(~np.eye(t, dtype=bool))  # feature_vector_block order
+    seg = np.arange(t) // -(-t // n_segments)
+    # np.take keeps every block C-contiguous: a row sum over a strided
+    # (fancy-indexed) block runs in another order than over the same row
+    # alone, which would make a record's PL depend on its batch
+    fa = np.take(zn, ii, axis=1) - np.take(zn, jj, axis=1)
+    na = np.sqrt((fa * fa).sum(axis=1))
+    for j, level in enumerate(levels):
+        if level < 3:
+            continue
+        ext = np.array([-3.0, *SAX_BREAKPOINTS[level], 3.0])
+        mids = (ext[:-1] + ext[1:]) / 2  # sax_to_values' bin midpoints
+        rec = np.take(np.take(mids, codes[:, j]), seg, axis=1)
+        fb = np.take(rec, ii, axis=1) - np.take(rec, jj, axis=1)
+        nb = np.sqrt((fb * fb).sum(axis=1))
+        zero = (na == 0) | (nb == 0)
+        cos = (fa * fb).sum(axis=1) / np.where(zero, 1.0, na * nb)
+        pl[:, j] = np.where(
+            zero, np.where((na == 0) & (nb == 0), 0.0, 1.0), 1.0 - cos)
+    return codes, pl
 
 
 def sax_to_values(sax_string: str, alphabet_size: int, original_length: int) -> np.ndarray:
@@ -199,6 +242,16 @@ def pattern_loss_block(
     Zero-norm handling per reference sax_utils.py:160-166 (both zero -> 0.0,
     one zero -> 1.0). Invalid levels raise per-row ValueError exactly where
     the reference would; callers replicate the reference's try/except policy.
+
+    The last bits depend on memory alignment: ``np.dot`` and
+    ``np.linalg.norm`` go through BLAS, whose summation order follows the
+    address of the row inside ``fv_orig``, so a row can differ by ~1e-16
+    from the same row passed alone (:func:`pattern_loss_single`). Callers
+    that only sum or compare losses within a tolerance may use it: the
+    naive node split's per-record PL, checked within 1e-9. Callers that
+    rank losses must not: the naive bad-leaf absorption picks the nearest
+    good leaf by strict ``<``, so a flipped last bit changes which leaf
+    wins a tie — it calls :func:`pattern_loss_single` once per pair.
     """
     block = np.asarray(block, dtype=np.float64)
     n_rows, n = block.shape

@@ -1,152 +1,85 @@
-"""Vectorized pandas-UDF wrappers around the numpy kernels.
+"""Arrow-boundary wrappers around the numpy kernels.
 
-Design: each UDF receives whole Arrow batches (`spark.sql.execution.arrow.
-maxRecordsPerBatch` rows at a time), stacks the series column into one 2-D
-float64 block and makes a single numpy call — no per-row Python anywhere
-(BASELINE input_hint). JVM-side expressions stay JVM-side; only the SAX /
-pattern-loss math crosses into Python, batched through Arrow.
+Design: a series column crosses into Python as one Arrow ``list<double>``
+array per batch; :func:`arrow_block` views its flat child as a 2-D float64
+block without building a Python object per row, the kernels make whole-
+block numpy calls, and the results go back as Arrow arrays built from
+numpy buffers — no per-row Python on either side of the boundary.
+
+NEGATIVE RESULT (BENCH.md r04): a pure-JVM staged-projection SAX
+expression measured 2.2-2.7x SLOWER than the Python UDF at 10M rows
+(28-34 s vs 13-16 s, local[16]): codegen's subexpression elimination
+skips expressions under conditional CASE branches, so the z-norm/PAA tree
+re-evaluated once per breakpoint term, while numpy computes a batch in
+~20 vectorized passes. It had no production caller and was removed.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, DoubleType, StringType
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql.functions import arrow_udf
 
-from .kernels import (
-    SAX_BREAKPOINTS,
-    _SIGMA_FLOOR,
-    pattern_loss_block,
-    sax_all_levels_block,
-    sax_block,
-)
+from .kernels import sax_pl_levels_block
 
 
-def sax_paa_expr(values_col: str, t: int = 8, n_segments: int = 4) -> F.Column:
-    """JVM-side z-norm + PAA for the flagship shape (t=8, 4 segments of
-    2): array<double> of the 4 PAA values. Bit-exact mirror of
-    ``kernels.znorm_block``/``paa_block``: numpy 1.26's pairwise
-    reduction for 8 contiguous float64s is the adjacent-pairs tree
-    ``((a0+a1)+(a2+a3))+((a4+a5)+(a6+a7))`` (probed on this numpy build;
-    pinned bit-for-bit in tests/test_kernels.py), reproduced
-    term-for-term for both the mean and the variance sums; rows with
-    sigma < 1e-6 become all-zero PAA (reference sax_utils.py:11-12)."""
-    if t != 8 or n_segments != 4:
-        raise ValueError("expression path supports t=8, n_segments=4 only")
-    v = [F.col(values_col).getItem(i).cast("double") for i in range(8)]
-
-    def tree8(x: list) -> F.Column:
-        return ((x[0] + x[1]) + (x[2] + x[3])) + ((x[4] + x[5]) + (x[6] + x[7]))
-
-    mean = tree8(v) / F.lit(8.0)
-    d = [x - mean for x in v]
-    var = tree8([y * y for y in d]) / F.lit(8.0)
-    std = F.sqrt(var)
-    flat = std < F.lit(_SIGMA_FLOOR)
-    zn = [F.when(flat, F.lit(0.0)).otherwise(y / std) for y in d]
-    return F.array(*[(zn[2 * i] + zn[2 * i + 1]) / F.lit(2.0) for i in range(4)])
-
-
-def sax_words_from_paa_expr(
-    paa_col: str, levels: list[int], n_segments: int = 4
-) -> F.Column:
-    """SAX words at every level from a PAA array column: symbol index ==
-    ``searchsorted(bps, p, 'left')`` via a strict ``p > bp`` counter;
-    level < 3 yields the ``"a"*n_segments`` literal (reference
-    sax_utils.py:62-85). Kept as a SEPARATE projection from
-    :func:`sax_paa_expr` so each expression tree stays small — inlining
-    the z-norm/PAA tree into every breakpoint comparison multiplies it
-    ~4*alphabet times per level and wedges Catalyst analysis on deep
-    alphabets (observed at level 20). Assumes NaN-free input (Spark
-    orders NaN above all doubles, searchsorted below; every series
-    producer in this engine is NaN-free by construction)."""
-    alphabet = "abcdefghijklmnopqrst"
-    words = []
-    for lv in levels:
-        if lv not in SAX_BREAKPOINTS:
-            if lv < 3:
-                words.append(F.lit("a" * n_segments))
-                continue
-            raise ValueError(f"Alphabet size {lv} unsupported")
-        segs = []
-        for j in range(n_segments):
-            p = F.col(paa_col).getItem(j)
-            idx = None
-            for bp in SAX_BREAKPOINTS[lv]:
-                term = F.when(p > F.lit(float(bp)), 1).otherwise(0)
-                idx = term if idx is None else idx + term
-            segs.append(F.substring(F.lit(alphabet[:lv]), idx + 1, 1))
-        words.append(F.concat(*segs))
-    return F.array(*words)
-
-
-def _stack(values: pd.Series) -> np.ndarray:
-    if len(values) == 0:
-        return np.empty((0, 0), dtype=np.float64)
-    return np.stack(values.to_numpy()).astype(np.float64, copy=False)
-
-
-def make_sax_udf(level: int, n_segments: int = 4):
-    """UDF: array<double> -> SAX word at a single alphabet level."""
-
-    @pandas_udf(StringType())
-    def sax_word(values: pd.Series) -> pd.Series:
-        block = _stack(values)
-        if block.shape[0] == 0:
-            return pd.Series([], dtype=object)
-        return pd.Series(sax_block(block, level, n_segments), dtype=object)
-
-    return sax_word
-
-
-def make_sax_levels_udf(levels: list[int], n_segments: int = 4):
-    """UDF: array<double> -> array<string> of SAX words, one per level in
-    ``levels`` (z-norm + PAA computed once per batch for all levels)."""
-    levels = list(levels)
-
-    @pandas_udf(ArrayType(StringType()))
-    def sax_words(values: pd.Series) -> pd.Series:
-        block = _stack(values)
-        if block.shape[0] == 0:
-            return pd.Series([], dtype=object)
-        by_level = sax_all_levels_block(block, levels, n_segments)
-        cols = [by_level[lv] for lv in levels]
-        return pd.Series([list(t) for t in zip(*cols)], dtype=object)
-
-    return sax_words
-
-
-@pandas_udf(DoubleType())
-def pattern_loss_udf(values: pd.Series, sax: pd.Series, level: pd.Series) -> pd.Series:
-    """Per-record Pattern Loss with the reference KAPRA policy
-    (kapra_anonymization.py:273-280): level < 3 -> 1.0; kernel errors -> 0.0."""
-    block = _stack(values)
+def arrow_block(values: pa.Array | pa.ChunkedArray) -> np.ndarray:
+    """(n_rows, t) float64 block of a ``list<double>`` Arrow column: the
+    flat child reshaped, zero-copy for one null-free chunk. Raises on
+    ragged rows, which a plain reshape could silently misalign."""
+    if isinstance(values, pa.ChunkedArray):
+        values = values.combine_chunks()
     n = len(values)
     if n == 0:
-        return pd.Series([], dtype=np.float64)
-    words = sax.to_numpy(dtype=object)
-    levels = level.to_numpy()
-    out = np.empty(n, dtype=np.float64)
-    ok = levels >= 3
-    out[~ok] = 1.0
-    if ok.any():
-        try:
-            out[ok] = pattern_loss_block(block[ok], words[ok], levels[ok])
-        except Exception:
-            # reference wraps each record in try/except -> 0; fall back
-            # row-at-a-time only on the (never-hit in practice) error path
-            for i in np.flatnonzero(ok):
-                try:
-                    out[i] = pattern_loss_block(
-                        block[i : i + 1], words[i : i + 1], levels[i : i + 1]
-                    )[0]
-                except Exception:
-                    out[i] = 0.0
-    return pd.Series(out)
+        return np.empty((0, 0), dtype=np.float64)
+    lengths = pc.list_value_length(values).to_numpy(zero_copy_only=False)
+    t = int(lengths[0])
+    if (lengths != t).any():
+        raise ValueError("series of unequal length in one column")
+    flat = values.flatten().to_numpy(zero_copy_only=False)
+    return flat.astype(np.float64, copy=False).reshape(n, t)
 
 
-def with_sax(df, values_col: str, level: int, out_col: str = "sax",
-             n_segments: int = 4):
-    return df.withColumn(out_col, make_sax_udf(level, n_segments)(F.col(values_col)))
+def list_array(flat: np.ndarray | pa.Array, width: int) -> pa.ListArray:
+    """``list`` column of ``len(flat) // width`` rows of ``width`` values."""
+    offsets = np.arange(0, len(flat) + 1, width, dtype=np.int32)
+    if not isinstance(flat, pa.Array):
+        flat = pa.array(flat)
+    return pa.ListArray.from_arrays(pa.array(offsets), flat)
+
+
+def words_list(codes: np.ndarray) -> pa.ListArray:
+    """``list<string>`` column from (n_rows, n_levels, n_segments) symbol
+    indices (0 == 'a'): the words are read from one byte buffer."""
+    n, n_levels, w = codes.shape
+    data = np.ascontiguousarray(codes + 97, dtype=np.uint8)
+    offsets = np.arange(0, data.size + 1, w, dtype=np.int32)
+    words = pa.StringArray.from_buffers(
+        n * n_levels, pa.py_buffer(offsets), pa.py_buffer(data))
+    return list_array(words, n_levels)
+
+
+def sax_pl_udf(levels: list[int], n_segments: int = 4, with_pl: bool = True):
+    """Arrow UDF: array<double> -> struct<sax_vec array<string>,
+    pl_vec array<double>> — the SAX word at every level in ``levels`` and
+    the record's pattern loss against its own word at each of them
+    (:func:`kernels.sax_pl_levels_block`). Without ``with_pl`` the
+    ``pl_vec`` field is null and no loss is computed."""
+    levels = list(levels)
+
+    @arrow_udf("struct<sax_vec: array<string>, pl_vec: array<double>>")
+    def sax_pl(values: pa.Array) -> pa.Array:
+        n = len(values)
+        block = arrow_block(values)
+        if n:
+            codes, pl = sax_pl_levels_block(block, levels, n_segments, with_pl)
+        else:
+            codes = np.empty((0, len(levels), n_segments), dtype=np.uint8)
+            pl = np.empty((0, len(levels))) if with_pl else None
+        pl_vec = (list_array(pl.ravel(), len(levels)) if with_pl
+                  else pa.nulls(n, pa.list_(pa.float64())))
+        return pa.StructArray.from_arrays(
+            [words_list(codes), pl_vec], names=["sax_vec", "pl_vec"])
+
+    return sax_pl

@@ -14,8 +14,9 @@ Semantics: exact match to the reference pipeline
 Spark-first architecture — "reduce to pattern space, orchestrate in
 pattern space, broadcast back":
 
-1. ONE vectorized pandas-UDF pass computes the SAX word at *every* level
-   (z-norm + PAA once per record) -> `sax_vec` column.
+1. ONE Arrow-UDF pass computes the SAX word at *every* level (z-norm +
+   PAA once per record) -> `sax_vec`, and the record's pattern loss
+   against its own word at each level -> `pl_vec`.
 2. ONE map-side-combinable aggregation groups records by their full
    `sax_vec` into pattern *combos*: (count, min_index, envelope lo/hi).
    Records with identical sax vectors can never be separated by any phase
@@ -26,8 +27,10 @@ pattern space, broadcast back":
    combo summaries, replaying the reference's dict-insertion order, stable
    sorts and strict-< argmin exactly (tuple keys simulate the reference's
    record-list ordering; a combo's records are contiguous in it).
-4. A tiny (vector -> group assignment) map is broadcast-joined back; the
-   only per-record Python after step 1 is the pattern-loss UDF.
+4. A tiny (vector -> group assignment) map is broadcast-joined back and
+   each record's PL is read from `pl_vec` at its group level: a record's
+   pattern is always its own word at that level (the '*' group uses the
+   level-3 word at level 3), so no Python runs after step 1.
 
 At 100 TB this is: one UDF scan (embarrassingly parallel), one tiny
 combined shuffle, one broadcast join — no iteration ever touches the data.
@@ -49,7 +52,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.sax_udfs import make_sax_levels_udf, pattern_loss_udf
+from ..functions.sax_udfs import sax_pl_udf
 from .envelope import envelope_agg, merge_envelope_agg
 from .rank import distributed_rank
 
@@ -174,9 +177,9 @@ def _release_local_checkpoint(df: DataFrame) -> None:
        blocks are the only copy, so a reader evicted after release dies
        with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND instead of recomputing).
        When the reader outlives the operator (e.g. a returned `records`
-       cache), thread the checkpoint handles OUT to the caller
-       (`_ckpt_parts` in operators/naive.py, `rank_caches` in the
-       fallback below) and release at final materialization.
+       cache), keep the checkpoint handles until final materialization
+       (`rank_caches` in the fallback below, the leaf checkpoint in
+       operators/naive.py) and release them then.
     2. ACROSS concurrent pipelines in one session: never share a
        persisted plan you intend to release. Spark's CacheManager
        aliases sameResult plans to one InMemoryRelation, so an
@@ -190,6 +193,14 @@ def _release_local_checkpoint(df: DataFrame) -> None:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Exception:
         pass
+
+
+def _pl_col(compute_pl: bool) -> list:
+    """The record's PL: ``pl_vec`` holds one loss per level from 3 up, and
+    the record's pattern is its own word at ``level``."""
+    if not compute_pl:
+        return []
+    return [F.element_at("pl_vec", F.col("level") - 2).alias("pl")]
 
 
 class _Combo:
@@ -224,18 +235,8 @@ def kapra_anonymize(
         t = len(df.select(values_col).first()[0])
 
     levels = list(range(3, sax_level + 1))
-    # SAX scan: Arrow-batched pandas UDF — the measured-fastest path.
-    # NEGATIVE RESULT (r04, pinned like r03's HOF finding): a pure-JVM
-    # staged-projection SAX expression (functions/sax_udfs.py
-    # sax_paa_expr + sax_words_from_paa_expr, bit-exact vs the kernel in
-    # test_sax_expr_bit_equals_udf) measured 2.2-2.7x SLOWER than this
-    # UDF at 10M rows (28-34 s vs 13-16 s, local[16]): codegen's
-    # subexpression elimination skips expressions under conditional CASE
-    # branches, so the z-norm/PAA tree re-evaluates once per breakpoint
-    # term (~4*alphabet times per level), while numpy computes the whole
-    # batch in ~20 vectorized passes. The expressions stay available
-    # (and tested) for fuse-into-scan use cases where avoiding python
-    # workers matters more than throughput.
+    # SAX + PL scan: one Arrow UDF (functions/sax_udfs.py; the JVM-
+    # expression alternative is a recorded negative result there)
 
     # `_run` PLAN-UNIQUING column (r04, VERDICT r03 #2): `base` (and the
     # derived `combo_df`) depends only on (input plan, sax_level), so two
@@ -251,10 +252,9 @@ def kapra_anonymize(
         F.col(index_col).cast("long").alias("original_index"),
         F.col(values_col).alias("values"),
         F.lit(f"k{next(_RUN_SEQ)}").alias("_run"),
-    )
-    base = base.withColumn(
-        "sax_vec", make_sax_levels_udf(levels, n_segments)(F.col("values"))
-    )
+        sax_pl_udf(levels, n_segments, compute_pl)(F.col(values_col))
+        .alias("_s"),
+    ).select("original_index", "values", "_run", "_s.sax_vec", "_s.pl_vec")
     base = base.withColumn(
         "combo_key", F.concat_ws("\x1f", F.col("sax_vec"))
     ).persist()
@@ -401,14 +401,10 @@ def kapra_anonymize(
 
     records = base.join(F.broadcast(mapping), "combo_key").select(
         "original_index", "group_id", "pattern", "level", "values",
-        "lower", "upper", "vl", "p_order", "c_order",
+        "lower", "upper", "vl", "p_order", "c_order", *_pl_col(compute_pl),
     )
-    if compute_pl:
-        records = records.withColumn(
-            "pl", pattern_loss_udf(F.col("values"), F.col("pattern"), F.col("level"))
-        )
-    # persist: the PL UDF + broadcast join run ONCE — the avg_pl aggregate
-    # below and every caller action (count/collect/write) hit the cache
+    # persist: the broadcast join runs ONCE — the avg_pl aggregate below
+    # and every caller action (count/collect/write) hit the cache
     records = records.persist()
 
     avg_vl = float(np.mean([g["vl"] for g in out_groups])) if out_groups else 0.0
@@ -643,13 +639,8 @@ def _kapra_distributed(
     # shuffle join on combo_key: both sides are C-sized — never broadcast
     records = base.join(rec_map, "combo_key").select(
         "original_index", "group_id", "pattern", "level", "values",
-        "lower", "upper", "vl", "p_order", "c_order",
-    )
-    if compute_pl:
-        records = records.withColumn(
-            "pl", pattern_loss_udf(F.col("values"), F.col("pattern"), F.col("level"))
-        )
-    records = records.persist()
+        "lower", "upper", "vl", "p_order", "c_order", *_pl_col(compute_pl),
+    ).persist()
 
     avg_vl = float(np.mean([g["vl"] for g in out_groups])) if out_groups else 0.0
     if compute_pl:

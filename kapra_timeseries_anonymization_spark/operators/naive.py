@@ -15,28 +15,26 @@ Semantics: exact match to the reference
   row_number over (value, pos); `pos` carries the reference's list order
   through rounds, so rejected/terminal partitions keep the same member
   order the in-place sorts would have produced.
-- Phase 2 (node splitting) + Phase 3 (bad-leaf absorption) run per k-group
-  inside bucketed `applyInPandas` tasks (r03: many k-groups per task, so
-  Arrow overhead amortizes): every k-group is small (Mondrian stops
-  below 2k), so the reference's recursive tree — vectorized with the
-  numpy SAX kernels per node — runs locally and exactly, including
-  child_merge freezing, in-place level maximization, '*' merged-all leaf,
-  strict-< nearest-good-leaf absorption, and dropped-records edge when no
-  good leaf is reachable.
+- The Mondrian finish, Phase 2 (node splitting) and Phase 3 (bad-leaf
+  absorption) run in ONE grouped ``applyInArrow`` pass over hash buckets
+  of live pids (_make_node_split_fn): each bucket finishes Mondrian in
+  numpy (_mondrian_finish, bit-identical stable-sort semantics), then
+  runs the reference's recursive tree on every leaf — every k-group is
+  small (Mondrian stops below 2k) — including child_merge freezing,
+  in-place level maximization, '*' merged-all leaf, strict-<
+  nearest-good-leaf absorption, and dropped-records edge when no good
+  leaf is reachable. Records carry their leaf pid; GroupID is the rank
+  of the distinct leaf pids, joined back.
 
 Scale: rounds are bounded and data-parallel (one window shuffle each over
 a shrinking live set); the only driver state is per-partition stats. The
-applyInPandas stage is naturally skew-free (groups < 2k rows) unless the
-data is degenerate (zero spread everywhere -> one giant partition), which
-is inherited reference behavior and documented.
-
-r05: distributed rounds run only while the largest live partition
-exceeds ``local_threshold`` (default 64k rows); the remaining
-~log2(threshold/2k) levels finish IN-TASK via one applyInPandas job with
-bit-identical stable-sort semantics (_make_local_mondrian_udf) — at 10M
-series this replaces ~12 of ~19 rounds (each an agg + anti-join + window
-shuffle + checkpoint over the live set) with a single shuffle. Gated by
-the numpy-oracle equivalence test at thresholds {0, 64, 100000} and the
+distributed rounds run only while the largest live partition exceeds
+``local_threshold`` (default 64k rows), so a bucket holds pids of at most
+that size unless the data is degenerate (zero spread everywhere -> one
+giant partition), which is inherited reference behavior. At 10M series
+the in-memory finish replaces ~12 of ~19 rounds (each an agg + anti-join
++ window shuffle + checkpoint over the live set). Gated by the
+numpy-oracle equivalence test at thresholds {0, 64, 100000} and the
 96-config grid parity.
 
 r05 head parallelism: while the largest live partition exceeds
@@ -45,7 +43,7 @@ number is a range-partitioned two-stage rank instead of
 ``Window.partitionBy("pid")`` — round 0 has ONE pid, so the plain
 window sorted the ENTIRE input in one task (measured ~25 min of the
 100M run in round 0 alone). See HEAD PARALLELISM in
-:func:`mondrian_partition`; gated by the same numpy-oracle equivalence
+:func:`_mondrian_rounds`; gated by the same numpy-oracle equivalence
 test at thresholds {0 (never), 1 (always)}.
 """
 
@@ -56,18 +54,27 @@ import math
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.window import Window
 
-from kapra_timeseries_anonymization_spark.operators.kapra import (
-    _release_local_checkpoint,
+from ..functions.kernels import (
+    SAX_BREAKPOINTS,
+    pattern_loss_block,
+    pattern_loss_single,
+    sax_all_levels_block,
 )
-from kapra_timeseries_anonymization_spark.operators.rank import distributed_rank
+from ..functions.sax_udfs import arrow_block, list_array
+from ..plans.lifetime import register_checkpoint
+from .kapra import _release_local_checkpoint
+from .rank import distributed_rank
 
 #: per-invocation plan-uniquing token (see the root-pid comment in
-#: mondrian_partition). A process-local counter is enough: aliasing only
+#: _mondrian_rounds). A process-local counter is enough: aliasing only
 #: happens between plans built in the SAME SparkSession.
 _RUN_SEQ = itertools.count()
 
@@ -85,81 +92,244 @@ class NaiveGroups:
     n_groups: int
 
 
-def _make_local_mondrian_udf(k: int):
-    """Finish Mondrian IN-TASK for one pid whose live partition fits in
-    memory (r05, VERDICT r04 #3). Once max live partition size drops to
-    ``local_threshold``, the remaining ~log2(threshold/2k) rounds — each a
-    full agg + anti-join + window shuffle over the live set in the
-    distributed loop — collapse into ONE applyInPandas job. The in-task
-    recursion is semantically identical to the distributed rounds:
+def _mondrian_finish(series: np.ndarray, k: int) -> list[tuple[np.ndarray, str]]:
+    """Finish Mondrian in memory for one pid whose rows are given in
+    ``pos`` order: the same recursion as the distributed rounds —
     first-argmax spread column, floor(n/2) stable median split ordered by
-    (value, pos), stop below 2k or zero spread. Exactness is gated by the
-    96-config naive grid parity (this path handles every round past the
-    first few) and the local-vs-distributed equivalence pytest."""
-
-    def finish(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("pos", kind="stable").reset_index(drop=True)
-        series = np.stack(pdf["values"].to_numpy()).astype(np.float64)
-        pid0 = pdf["pid"].iloc[0]
-        out_rows: list[np.ndarray] = []
-        out_pid: list[str] = []
-        out_n: list[int] = []
-        # iterative DFS; emission order is irrelevant (GroupID comes from
-        # the global lexicographic pid rank downstream)
-        stack = [(np.arange(len(pdf), dtype=np.int64), pid0)]
-        while stack:
-            rows, pid = stack.pop()
-            n = len(rows)
+    (value, pos), stop below 2k or at zero spread. Returns the leaves in
+    DFS (lhs-first) order as (row positions in the leaf's own pos order,
+    pid suffix)."""
+    leaves = []
+    stack = [(np.arange(len(series)), "")]
+    while stack:
+        rows, suffix = stack.pop()
+        n = len(rows)
+        if n >= 2 * k:
             sub = series[rows]
-            if n >= 2 * k:
-                spreads = sub.max(axis=0) - sub.min(axis=0)
-                best = spreads.max()
-            else:
-                best = 0.0
-            if n < 2 * k or not best > 0:
-                out_rows.append(rows)
-                out_pid.append(pid)
-                out_n.append(n)
+            spreads = sub.max(axis=0) - sub.min(axis=0)
+            if spreads.max() > 0:
+                ci = int(np.argmax(spreads))  # first occurrence of the max
+                # rows is in pos order, so a stable argsort on the split
+                # column == the distributed orderBy(_kv, pos)
+                order = np.argsort(sub[:, ci], kind="stable")
+                mid = n // 2
+                stack.append((rows[order[mid:]], suffix + "1"))
+                stack.append((rows[order[:mid]], suffix + "0"))
                 continue
-            ci = int(np.argmax(spreads))  # first occurrence of the max
-            # rows is in current-pos order, so a stable argsort on the
-            # split column == the distributed orderBy(_kv, pos)
-            order = np.argsort(sub[:, ci], kind="stable")
-            mid = n // 2
-            stack.append((rows[order[:mid]], pid + "0"))
-            stack.append((rows[order[mid:]], pid + "1"))
-        idx = np.concatenate(out_rows)
-        return pd.DataFrame(
-            {
-                "original_index": pdf["original_index"].to_numpy()[idx],
-                "values": pdf["values"].to_numpy()[idx],
-                "pid": np.repeat(np.asarray(out_pid, dtype=object), out_n),
-                "pos": np.concatenate(
-                    [np.arange(1, c + 1, dtype=np.int64) for c in out_n]
-                ),
-            }
-        )
-
-    return finish
+        leaves.append((rows, suffix))
+    return leaves
 
 
-def mondrian_partition(
+def _finished_leaves(table: pa.Table, k: int):
+    """Sort one bucket by (pid, pos) and finish Mondrian for each of its
+    pids. Returns the sorted table, its (n, t) series block and the
+    leaves as (bucket row positions, leaf pid)."""
+    table = table.sort_by([("pid", "ascending"), ("pos", "ascending")])
+    pid = table.column("pid").combine_chunks()
+    n = len(pid)
+    cut = np.flatnonzero(
+        pc.not_equal(pid[1:], pid[:-1]).to_numpy(zero_copy_only=False)) + 1
+    series = arrow_block(table.column("values"))
+    leaves = []
+    for s, e in zip([0, *cut.tolist()], [*cut.tolist(), n]):
+        root = pid[s].as_py()
+        leaves += [(rows + s, root + suffix)
+                   for rows, suffix in _mondrian_finish(series[s:e], k)]
+    return table, series, leaves
+
+
+def _split_group(rows: list, words: dict, series: np.ndarray, P: int,
+                 max_level: int) -> list[list]:
+    """Node splitting + bad-leaf absorption for one k-group (reference
+    naive_anonymization.py:39-257). ``rows``: the group's member order;
+    ``words[level][row]``: each row's SAX word. Returns the good leaves
+    as [rows, pattern, level] in output order, with child_merge freezing,
+    in-place level maximization, the '*' merged-all leaf, strict-<
+    nearest-good-leaf absorption and dropped records when no good leaf is
+    reachable."""
+    leaves: list[list] = []  # [rows, pattern, level, good], DFS order
+
+    def split(rows, level, pattern, frozen=False):
+        size = len(rows)
+        if frozen or size >= P and level == max_level:
+            leaves.append([rows, pattern, level, True])
+            return
+        if size < P:
+            leaves.append([rows, pattern, level, False])
+            return
+        if size < 2 * P:
+            while level < max_level:
+                w = words[level + 1]
+                w0 = w[rows[0]]
+                if any(w[r] != w0 for r in rows):
+                    break
+                level, pattern = level + 1, w0
+            leaves.append([rows, pattern, level, True])
+            return
+        w = words[level + 1]
+        groups: dict[str, list] = {}
+        for r in rows:
+            groups.setdefault(w[r], []).append(r)
+        children = [(rs, level + 1, pat) for pat, rs in groups.items()
+                    if len(rs) >= P]
+        small = [(rs, level + 1, pat) for pat, rs in groups.items()
+                 if len(rs) < P]
+        if sum(len(c[0]) for c in small) >= P:
+            # child_merge: parent's level/pattern, frozen good
+            merged = [r for c in small for r in c[0]]
+            children.append((merged, level, pattern, True))
+        else:
+            children += small
+        for c in children:
+            split(*c)
+
+    split(rows, 1, words[1][rows[0]])
+    good = [l for l in leaves if l[3]]
+    bad = [l for l in leaves if not l[3]]
+    if bad and not good:
+        return [[[r for l in bad for r in l[0]], "*", 2]]
+    for bl in bad:
+        # per-call PL on purpose: strict-< ties need the exact loss
+        # (see kernels.pattern_loss_block)
+        mean_ts = series[bl[0]].mean(axis=0)
+        best, min_d = None, math.inf
+        for gl in good:
+            try:
+                d = pattern_loss_single(mean_ts, gl[1], gl[2])
+            except Exception:
+                d = math.inf
+            if d < min_d:
+                min_d, best = d, gl
+        if best is not None:
+            best[0].extend(bl[0])
+        # else: records are dropped (reference :254-257)
+    return [l[:3] for l in good]
+
+
+def _make_node_split_fn(K: int, P: int, max_level: int, n_segments: int):
+    """One Arrow pass per bucket of live pids: finish Mondrian, then for
+    every leaf (k-group) the node-split tree, absorption, envelope and
+    PL. SAX words for levels 1..max_level are computed once per bucket,
+    every record's PL comes from one block call and the output columns
+    are built from numpy; each record carries its leaf pid, from which
+    GroupID is ranked downstream."""
+    levels = list(range(1, max_level + 1))
+
+    def run(table: pa.Table) -> pa.Table:
+        if table.num_rows == 0:
+            return _SPLIT_ARROW.empty_table()
+        table, series, leaves = _finished_leaves(table, K)
+        words = {lv: w.tolist() for lv, w in
+                 sax_all_levels_block(series, levels, n_segments).items()}
+        rows, pattern, level, seq, pid = [], [], [], [], []
+        for members, leaf_pid in leaves:
+            good = _split_group(members.tolist(), words, series, P, max_level)
+            for i, (rs, pat, lvl) in enumerate(good):
+                rows.append(rs)
+                pattern.append(pat)
+                level.append(lvl)
+                seq.append(i)
+                pid.append(leaf_pid)
+        lens = np.array([len(r) for r in rows], dtype=np.int64)
+        starts = np.cumsum(lens) - lens
+        idx = np.fromiter(itertools.chain.from_iterable(rows), np.int64,
+                          count=int(lens.sum()))
+        sub = series[idx]
+        # == kernels.envelope per leaf, bit for bit
+        lo = np.minimum.reduceat(sub, starts, axis=0)
+        hi = np.maximum.reduceat(sub, starts, axis=0)
+        vl = np.sqrt(np.square(hi - lo).sum(axis=1) / sub.shape[1])
+        vl4 = np.array([round(v, 4) for v in vl.tolist()])
+        r_level = np.repeat(np.asarray(level, dtype=np.int32), lens)
+        r_pattern = np.repeat(np.asarray(pattern, dtype=object), lens)
+        # level < 3 -> 1.0; a level the kernel rejects -> NaN (the
+        # reference skips the record in the PL numerator)
+        pl = np.ones(len(idx))
+        ok = np.isin(r_level, list(SAX_BREAKPOINTS)) & (r_level >= 3)
+        pl[(r_level >= 3) & ~ok] = np.nan
+        pl[ok] = pattern_loss_block(sub[ok], r_pattern[ok], r_level[ok])
+        cols = [
+            table.column("original_index").combine_chunks().take(idx),
+            np.repeat(np.asarray(seq, dtype=np.int32), lens),
+            (np.arange(len(idx)) - np.repeat(starts, lens)).astype(np.int32),
+            r_pattern, r_level,
+            list_array(np.repeat(lo, lens, axis=0).ravel(), sub.shape[1]),
+            list_array(np.repeat(hi, lens, axis=0).ravel(), sub.shape[1]),
+            np.repeat(vl4, lens), pl,
+            np.repeat(np.asarray(pid, dtype=object), lens),
+        ]
+        return pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, _SPLIT_ARROW)],
+            schema=_SPLIT_ARROW)
+
+    return run
+
+
+def _make_finish_fn(k: int):
+    """Arrow pass per bucket for :func:`mondrian_partition`: the Mondrian
+    finish alone, one output row per input row with its leaf pid and its
+    1-based position in the leaf's member order."""
+
+    def run(table: pa.Table) -> pa.Table:
+        if table.num_rows == 0:
+            return _FINISH_ARROW.empty_table()
+        table, _, leaves = _finished_leaves(table, k)
+        idx = np.concatenate([rows for rows, _ in leaves])
+        lens = np.array([len(rows) for rows, _ in leaves])
+        starts = np.cumsum(lens) - lens
+        return pa.Table.from_arrays([
+            table.column("original_index").combine_chunks().take(idx),
+            table.column("values").combine_chunks().take(idx),
+            pa.array(np.repeat(np.array([p for _, p in leaves], dtype=object),
+                               lens), type=pa.string()),
+            pa.array(np.arange(len(idx)) - np.repeat(starts, lens) + 1,
+                     type=pa.int64()),
+        ], schema=_FINISH_ARROW)
+
+    return run
+
+
+_FINISH_SCHEMA = T.StructType([
+    T.StructField("original_index", T.LongType()),
+    T.StructField("values", T.ArrayType(T.DoubleType())),
+    T.StructField("pid", T.StringType()),
+    T.StructField("pos", T.LongType()),
+])
+_SPLIT_SCHEMA = T.StructType([
+    T.StructField("original_index", T.LongType()),
+    T.StructField("leaf_seq", T.IntegerType()),
+    T.StructField("row_ord", T.IntegerType()),
+    T.StructField("pattern", T.StringType()),
+    T.StructField("level", T.IntegerType()),
+    T.StructField("lower", T.ArrayType(T.DoubleType())),
+    T.StructField("upper", T.ArrayType(T.DoubleType())),
+    T.StructField("vl", T.DoubleType()),
+    T.StructField("pl", T.DoubleType()),
+    T.StructField("pid", T.StringType()),
+])
+_FINISH_ARROW = to_arrow_schema(_FINISH_SCHEMA)
+_SPLIT_ARROW = to_arrow_schema(_SPLIT_SCHEMA)
+
+
+def _mondrian_rounds(
     df: DataFrame,
-    values_col: str = "values",
-    index_col: str = "original_index",
-    k: int = 8,
-    t: int | None = None,
-    local_threshold: int = 65536,
-    rank_head_rows: int = 4_000_000,
-) -> DataFrame:
-    """Reference-exact Mondrian: returns (original_index, values, pid, pos,
-    group_id) where pid is the leaf path and group_id the 1-based DFS rank.
+    values_col: str,
+    index_col: str,
+    k: int,
+    t: int | None,
+    local_threshold: int,
+    rank_head_rows: int,
+) -> tuple[list[DataFrame], int]:
+    """Distributed Mondrian rounds. Returns the round slices — eager
+    localCheckpoints with columns (original_index, values, pid, pos),
+    together covering every row once — and the size bound of the largest
+    live partition in round 0. Rows of a pid that is still
+    splittable when the rounds stop are finished in memory by
+    :func:`_mondrian_finish`; every other pid is already a leaf.
 
-    ``local_threshold``: once the largest live partition fits under it,
-    the remaining rounds run in-task (one applyInPandas job) instead of
-    one distributed round per split level — see _make_local_mondrian_udf.
-    0 disables the switch (pure distributed loop, kept for the
-    equivalence test).
+    ``local_threshold``: the rounds stop once the largest live partition
+    fits under it. 0 disables the switch (pure distributed loop, kept for
+    the equivalence test).
 
     ``rank_head_rows``: while the largest live partition exceeds this
     many rows, the per-pid median-split row number comes from a
@@ -187,11 +357,12 @@ def mondrian_partition(
     root_pid = f"r{next(_RUN_SEQ)}:"
     cur = df.select(
         F.col(index_col).cast("long").alias("original_index"),
-        F.col(values_col).alias("values"),
+        F.col(values_col).cast("array<double>").alias("values"),
     ).withColumn("pid", F.lit(root_pid)).withColumn(
         "pos", F.col("original_index")
     ).localCheckpoint(eager=True)
     done_parts: list[DataFrame] = []
+    n_head = 0
     # MEMORY SHAPE (r03, reworked r04): peak footprint is O(N) — the
     # current round's checkpoint + the next round's + the accumulated
     # done slices (disjoint, <= N rows total). The r02 scheme (lazy done
@@ -244,43 +415,25 @@ def mondrian_partition(
             )
             .localCheckpoint(eager=True)
         )
-        if dec.count() == 0:
-            # terminal round: everything left is final. cur is already a
-            # materialized checkpoint — reuse it as the final slice
+        # one read over dec's G tiny checkpointed rows answers both "any
+        # decisions left?" and the largest live partition: mid = n//2, so
+        # it has at most 2*max(mid)+1 rows — drives BOTH r05 switches
+        n_dec, max_mid = dec.agg(F.count(F.lit(1)), F.max("mid")).first()
+        max_live = 2 * (max_mid or 0) + 1
+        n_head = n_head or max_live
+        if n_dec == 0 or max_live <= local_threshold:
+            # terminal round (everything left is final), or LOCAL FINISH
+            # (r05): once the largest live partition fits the threshold,
+            # the remaining ~log2(threshold/2k) rounds run in memory,
+            # inside the one Arrow pass that follows — no (agg +
+            # anti-join + window + checkpoint) per round. cur is already
+            # a materialized checkpoint — reuse it as the final slice
             # (r04): with low-entropy data nearly all rows stay live to
             # the last round, so re-checkpointing here would transiently
             # double the largest slice (the 10M-series OOM spike).
             done_parts.append(cur)
             _release_local_checkpoint(dec)
             break
-        # dec's mid = n//2, so the largest live partition has at most
-        # 2*max(mid)+1 rows — drives BOTH r05 switches below. dec is a
-        # materialized checkpoint, so this is a read over G tiny rows,
-        # not a recompute of the stats agg.
-        max_live = 2 * dec.agg(F.max("mid")).first()[0] + 1
-        if local_threshold:
-            # LOCAL FINISH (r05): once the largest live partition fits
-            # the threshold, the remaining ~log2(threshold/2k) rounds
-            # run in-task: one shuffle by pid instead of (agg +
-            # anti-join + window + checkpoint) per round.
-            if max_live <= local_threshold:
-                done_parts.append(
-                    cur.join(dec.select("pid"), "pid", "left_anti")
-                    .localCheckpoint(eager=True)
-                )
-                done_parts.append(
-                    cur.join(dec.select("pid"), "pid")
-                    .groupBy("pid")
-                    .applyInPandas(
-                        _make_local_mondrian_udf(k),
-                        "original_index long, values array<double>, "
-                        "pid string, pos long",
-                    )
-                    .localCheckpoint(eager=True)
-                )
-                _release_local_checkpoint(cur)
-                _release_local_checkpoint(dec)
-                break
         # finals = rows whose pid has no split decision. Anti-join (not
         # isin): thousands of string literals in the plan make every
         # later Catalyst analysis pass quadratic. The EAGER checkpoint
@@ -395,208 +548,56 @@ def mondrian_partition(
         _release_local_checkpoint(dec)
         cur = nxt
 
-    out = done_parts[0]
-    for p in done_parts[1:]:
+    return done_parts, n_head
+
+
+def _by_bucket(parts: list[DataFrame], n_head: int):
+    """The round slices grouped into hash buckets of pid for one Arrow
+    pass: enough buckets to fill the cluster, and about 64k rows each
+    when round 0 saw more. A pid never straddles two buckets."""
+    out = parts[0]
+    for p in parts[1:]:
         out = out.unionByName(p)
-    # NO union cache (r04): every done part is an already-materialized
-    # checkpoint (or the terminal round's live cache), so the union is a
-    # block read — caching it would hold a second full copy of the data
-    # through the split phase. The two downstream consumers (distinct-pid
-    # rank, final join) re-read the blocks instead. The checkpoints are
-    # NOT freed here (ADVICE r03 #2): every downstream plan reads
-    # through them, and a localCheckpoint has no lineage to rebuild
-    # from, so releasing under a live reader turns an eviction into
-    # CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. The handles are threaded out
-    # via ``_ckpt_parts`` (the terminal round's checkpoint is simply one
-    # of the parts) and released by naive_anonymize only after the final
-    # `records` cache is materialized (same discipline as the kapra
-    # fallback's ``rank_caches``).
-    n_rows = out.count()
-    # GroupID: leaf pids are prefix-free, so lexicographic order == the
-    # reference's DFS (lhs-first) enumeration order (k_anon.py:116-119).
-    # Assigned DISTRIBUTIVELY: distinct pids ranked by global pid order
-    # (pids are pure-ASCII '0'/'1'/'r', so Spark's binary string ordering
-    # == the reference's code-point sort) -> join back. r03: the rank is
-    # TWO-STAGE (range-partition + local row_number + broadcast offsets,
-    # operators/rank.py) instead of a single-task Window.orderBy — G =
-    # O(N/k) distinct pids grows linearly with the data (VERDICT r02 #3).
-    # The map-back join is shuffle-or-broadcast at AQE's discretion.
-    gid_map = distributed_rank(out.select("pid").distinct(), "pid", "group_id")
-    result = out.join(gid_map, "pid")
-    # hand the caches to the caller so they can be released once
-    # downstream results are materialized
-    result._gid_cache = gid_map._rank_cache
-    result._ckpt_parts = done_parts
-    result._n_rows = n_rows
-    return result
+    para = out.sparkSession.sparkContext.defaultParallelism
+    n_buckets = max(para * 4, -(-n_head // 65536))
+    return out.groupBy(F.pmod(F.hash("pid"), F.lit(n_buckets)).alias("_b"))
 
 
-def _make_split_udf(K: int, P: int, max_level: int, n_segments: int):
-    """Node splitting + absorption for a BUCKET of k-groups.
-
-    r03 (VERDICT r02 #6): the task unit is a hash bucket of many k-groups,
-    not one k-group. At 1M series / k=8 there are ~82k groups of <2k rows
-    each; one applyInPandas task per group spends its wall-clock on
-    Arrow-batch + python-worker round-trip overhead, not on the tree. The
-    bucket wrapper amortizes that overhead over hundreds of groups per
-    task while leaving the per-group algorithm (and its reference-exact
-    semantics) untouched — each group is still processed independently
-    in-memory, and output order is restored downstream by
-    orderBy(group_id, leaf_seq, row_ord)."""
-
-    def split_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        # imports inside: executed on workers from the shipped package zip
-        from kapra_timeseries_anonymization_spark.functions.kernels import (
-            envelope,
-            pattern_loss_single,
-            sax_block,
-        )
-
-        pdf = pdf.sort_values("pos", kind="stable").reset_index(drop=True)
-        series = np.stack(pdf["values"].to_numpy()).astype(np.float64)
-        n = len(pdf)
-
-        def sax_of(rows: np.ndarray, level: int) -> np.ndarray:
-            return sax_block(series[rows], level, n_segments)
-
-        class Node:
-            __slots__ = ("rows", "level", "pattern", "label", "children")
-
-            def __init__(self, rows, level, pattern, label="intermediate"):
-                self.rows = rows          # list of local row positions
-                self.level = level
-                self.pattern = pattern
-                self.label = label
-                self.children = []
-
-        def split(node: Node) -> None:
-            size = len(node.rows)
-            if node.label == "good-leaf":
-                return
-            if size < P:
-                node.label = "bad-leaf"
-                return
-            if node.level == max_level:
-                node.label = "good-leaf"
-                return
-            if P <= size < 2 * P:
-                lvl, pat = node.level, node.pattern
-                while lvl < max_level:
-                    words = sax_of(np.array(node.rows), lvl + 1)
-                    if len(set(words)) == 1:
-                        lvl, pat = lvl + 1, words[0]
-                    else:
-                        break
-                node.level, node.pattern, node.label = lvl, pat, "good-leaf"
-                return
-            nxt = node.level + 1
-            words = sax_of(np.array(node.rows), nxt)
-            groups: dict[str, list[int]] = {}
-            for r, w in zip(node.rows, words):
-                groups.setdefault(w, []).append(r)
-            valid, small = [], []
-            for pat, rows in groups.items():
-                child = Node(rows, nxt, pat)
-                (valid if len(rows) >= P else small).append(child)
-            if sum(len(c.rows) for c in small) >= P:
-                merged: list[int] = []
-                for c in small:
-                    merged.extend(c.rows)
-                # child_merge: parent's level/pattern, frozen good
-                valid.append(Node(merged, node.level, node.pattern, "good-leaf"))
-                small = []
-            valid.extend(small)
-            if valid:
-                node.children = valid
-                for c in valid:
-                    split(c)
-            else:
-                node.children = []
-                node.label = "good-leaf"
-
-        def leaves(node: Node):
-            if not node.children:
-                return [node]
-            out = []
-            for c in node.children:
-                out.extend(leaves(c))
-            return out
-
-        root = Node(list(range(n)), 1, str(sax_of(np.array([0]), 1)[0]))
-        split(root)
-        ls = leaves(root)
-        good = [l for l in ls if l.label == "good-leaf"]
-        bad = [l for l in ls if l.label == "bad-leaf"]
-        if bad:
-            if not good:
-                rows: list[int] = []
-                for l in bad:
-                    rows.extend(l.rows)
-                good = [Node(rows, 2, "*", "good-leaf")]
-            else:
-                for bl in bad:
-                    mean_ts = series[bl.rows].mean(axis=0)
-                    best, min_d = None, math.inf
-                    for gl in good:
-                        try:
-                            d = pattern_loss_single(mean_ts, gl.pattern, gl.level)
-                        except Exception:
-                            d = math.inf
-                        if d < min_d:
-                            min_d, best = d, gl
-                    if best is not None:
-                        best.rows.extend(bl.rows)
-                    # else: records are dropped (reference :254-257)
-
-        recs = []
-        for leaf_seq, leaf in enumerate(good):
-            lo, hi, vl = envelope(series[leaf.rows])
-            vl4 = round(vl, 4)
-            for row_ord, r in enumerate(leaf.rows):
-                try:
-                    if leaf.level >= 3:
-                        pl = pattern_loss_single(series[r], leaf.pattern, leaf.level)
-                    else:
-                        pl = 1.0
-                except Exception:
-                    pl = float("nan")  # reference: skipped in PL numerator
-                recs.append(
-                    (
-                        int(pdf["original_index"].iloc[r]),
-                        leaf_seq,
-                        row_ord,
-                        leaf.pattern,
-                        int(leaf.level),
-                        [float(x) for x in lo],
-                        [float(x) for x in hi],
-                        vl4,
-                        pl,
-                        int(pdf["group_id"].iloc[0]),
-                    )
-                )
-        return pd.DataFrame(
-            recs,
-            columns=[
-                "original_index", "leaf_seq", "row_ord", "pattern", "level",
-                "lower", "upper", "vl", "pl", "group_id",
-            ],
-        )
-
-    def split_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        outs = [
-            split_group(sub)
-            for _, sub in pdf.groupby("group_id", sort=False)
-        ]
-        return pd.concat(outs, ignore_index=True)
-
-    return split_bucket
+def mondrian_partition(
+    df: DataFrame,
+    values_col: str = "values",
+    index_col: str = "original_index",
+    k: int = 8,
+    t: int | None = None,
+    local_threshold: int = 65536,
+    rank_head_rows: int = 4_000_000,
+) -> DataFrame:
+    """Reference-exact Mondrian: returns (pid, original_index, values,
+    pos, group_id) where pid is the leaf path and group_id the 1-based
+    DFS rank. The rounds and their two switches are those of
+    :func:`_mondrian_rounds`; the finish is the numpy one that
+    :func:`naive_anonymize` fuses with the node split."""
+    parts, n_head = _mondrian_rounds(df, values_col, index_col, k, t,
+                                     local_threshold, rank_head_rows)
+    leaves = (
+        _by_bucket(parts, n_head)
+        .applyInArrow(_make_finish_fn(k), _FINISH_SCHEMA)
+        .localCheckpoint(eager=True)
+    )
+    for p in parts:
+        _release_local_checkpoint(p)
+    register_checkpoint(leaves)
+    return leaves.join(_group_ids(leaves), "pid")
 
 
-_SPLIT_SCHEMA = (
-    "original_index long, leaf_seq int, row_ord int, pattern string, "
-    "level int, lower array<double>, upper array<double>, vl double, "
-    "pl double, group_id int"
-)
+def _group_ids(leaves: DataFrame) -> DataFrame:
+    """(pid, group_id). Leaf pids are prefix-free, so lexicographic order
+    == the reference's DFS (lhs-first) enumeration order
+    (k_anon.py:116-119); pids are pure-ASCII '0'/'1'/'r'/digits/':', so
+    Spark's binary string ordering == the reference's code-point sort.
+    The rank is two-stage (operators/rank.py), not a single-task
+    Window.orderBy: G = O(N/k) distinct pids grows with the data."""
+    return distributed_rank(leaves.select("pid").distinct(), "pid", "group_id")
 
 
 def naive_anonymize(
@@ -623,22 +624,23 @@ def naive_anonymize(
     failure, not a recompute. A production run wanting recompute-on-loss
     would swap the per-round localCheckpoints for reliable checkpoints
     (same call sites, `spark.sparkContext.setCheckpointDir`)."""
-    parts = mondrian_partition(df, values_col, index_col, K, t,
-                               local_threshold=local_threshold,
-                               rank_head_rows=rank_head_rows)
-    # bucket count: enough tasks to saturate the cluster, few enough that
-    # Arrow/python-worker overhead amortizes over many groups per task;
-    # ~64k rows per bucket keeps the in-task pandas frame small. group_ids
-    # are dense 1..G integers, so pmod spreads groups evenly.
-    para = df.sparkSession.sparkContext.defaultParallelism
-    n_rows = getattr(parts, "_n_rows", 0) or 0
-    n_buckets = max(para * 4, -(-n_rows // 65536))
+    parts, n_head = _mondrian_rounds(df, values_col, index_col, K, t,
+                                     local_threshold, rank_head_rows)
+    # eager: the pid rank and the join below both read it, and the Arrow
+    # pass must run once
+    leaves = (
+        _by_bucket(parts, n_head)
+        .applyInArrow(_make_node_split_fn(K, P, max_level, n_segments),
+                      _SPLIT_SCHEMA)
+        .localCheckpoint(eager=True)
+    )
+    for p in parts:
+        _release_local_checkpoint(p)
+    gid_map = _group_ids(leaves)
     records = (
-        parts.withColumn(
-            "_b", F.pmod(F.col("group_id"), F.lit(n_buckets)).cast("int")
-        )
-        .groupBy("_b")
-        .applyInPandas(_make_split_udf(K, P, max_level, n_segments), _SPLIT_SCHEMA)
+        leaves.join(gid_map, "pid")
+        .select("original_index", "leaf_seq", "row_ord", "pattern", "level",
+                "lower", "upper", "vl", "pl", "group_id")
         .persist()
     )
     row = records.agg(
@@ -647,20 +649,16 @@ def naive_anonymize(
         F.count(F.lit(1)).alias("c"),
         F.countDistinct("group_id").alias("g"),
     ).first()
-    # records is materialized in the cache now — release the Mondrian and
-    # GroupID-rank intermediates, THEN the per-round done-slice
-    # checkpoints those caches were reading (lifetime rule: a
+    # records is materialized in the cache now — release the GroupID rank
+    # cache and the leaf checkpoint it read (lifetime rule: a
     # localCheckpoint is released only after every cache built over it is
     # either released or fully materialized; see _release_local_checkpoint
     # in operators/kapra.py). After this point a `records` eviction
     # cannot be recomputed — acceptable for the local/bench deployment
     # (MEMORY_AND_DISK spills rather than drops); a production cluster
     # run would use reliable checkpoints for fault tolerance.
-    gid_cache = getattr(parts, "_gid_cache", None)
-    if gid_cache is not None:
-        gid_cache.unpersist()
-    for p in getattr(parts, "_ckpt_parts", ()):
-        _release_local_checkpoint(p)
+    gid_map._rank_cache.unpersist()
+    _release_local_checkpoint(leaves)
     avg_vl = (row["sv"] or 0.0) / row["c"] if row["c"] else 0.0
     avg_pl = (row["sp"] or 0.0) / row["c"] if row["c"] else 0.0
     return NaiveGroups(records, avg_vl, avg_pl, int(row["g"]))

@@ -27,11 +27,44 @@ CONFIGS = [
 @pytest.mark.parametrize("n_rows,seed,K,P,sax_level", CONFIGS)
 def test_kapra_spark_matches_oracle(spark, n_rows, seed, K, P, sax_level):
     df = generate_legacy_dataset(n_rows, seed=seed)
-    series = series_matrix(df).astype(np.float64)
+    _check_kapra(spark, series_matrix(df).astype(np.float64), K, P, sax_level)
 
+
+def test_kapra_segments_not_divisible(spark):
+    """t=10 with 4 segments: PAA uses array_split bounds (3, 3, 2, 2) and
+    the PL reconstruction repeats each symbol 3 times, cut to 10."""
+    rng = np.random.default_rng(4)
+    series = rng.integers(0, 40, size=(300, 10)).astype(np.float64)
+    _check_kapra(spark, series, K=6, P=2, sax_level=8)
+
+
+def test_kapra_k_above_row_count(spark):
+    """K greater than the row count: the greedy merge runs out of
+    partners and keeps one group below K, as the reference does."""
+    series = series_matrix(generate_legacy_dataset(6, seed=2))
+    _check_kapra(spark, series.astype(np.float64), K=8, P=2, sax_level=8)
+
+
+def test_kapra_without_pl(spark):
+    """compute_pl=False: same groups and records, no pl column, NaN avg."""
+    series = series_matrix(generate_legacy_dataset(300, seed=9))
+    sdf = _to_spark(spark, series.astype(np.float64))
+    a = kapra_anonymize(sdf, K=8, P=2, sax_level=8, t=8)
+    b = kapra_anonymize(sdf, K=8, P=2, sax_level=8, t=8, compute_pl=False)
+    assert "pl" not in b.records.columns and np.isnan(b.avg_pl)
+    cols = [c for c in b.records.columns if c != "values"]
+    assert sorted(a.records.select(*cols).collect()) == sorted(
+        b.records.select(*cols).collect())
+    assert [g["sax"] for g in a.groups] == [g["sax"] for g in b.groups]
+    a.records.unpersist()
+    b.records.unpersist()
+
+
+def _check_kapra(spark, series, K, P, sax_level):
     oracle = kapra_pipeline(series, K=K, P=P, sax_level=sax_level)
     got = kapra_anonymize(
-        _to_spark(spark, series), K=K, P=P, sax_level=sax_level, t=8
+        _to_spark(spark, series), K=K, P=P, sax_level=sax_level,
+        t=series.shape[1],
     )
 
     # record -> (group_id, pattern, level) must match EXACTLY

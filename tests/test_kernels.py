@@ -117,20 +117,8 @@ def test_znorm_matches_reference_formula():
         np.testing.assert_array_equal(zn[r], (s - s.mean()) / s.std())
 
 
-def test_sax_expr_bit_equals_udf(spark):
-    """JVM expression SAX == numpy-UDF SAX, string-exact, across random
-    scales, flat rows (sigma < 1e-6), and all table levels 2..20 plus the
-    level-1 literal. Pins the numpy pairwise-reduction replication in
-    make_sax_levels_expr."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from kapra_timeseries_anonymization_spark.functions.sax_udfs import (
-        make_sax_levels_udf,
-        sax_paa_expr,
-        sax_words_from_paa_expr,
-    )
-
+def _sax_mix():
+    """6,003 series: random scales, flat rows (sigma < 1e-6), integers."""
     rng = np.random.default_rng(123)
     rows = []
     for i in range(4000):
@@ -138,21 +126,58 @@ def test_sax_expr_bit_equals_udf(spark):
         rows.append([float(x) for x in rng.standard_normal(8) * scale])
     rows += [[5.0] * 8, [0.0] * 8, [1e-9 + 1.0] * 8]      # flat rows
     rows += [[float(x) for x in rng.integers(0, 50, 8)] for _ in range(2000)]
+    return rows
+
+
+def test_sax_pl_udf_matches_kernels(spark):
+    """The Arrow SAX+PL UDF, at all table levels 2..20 plus the level-1
+    literal: words string-exact vs sax_all_levels_block, pl_vec within
+    1e-12 of pattern_loss_single (1.0 below level 3, KAPRA's policy),
+    bit-identical PL when the same rows arrive in 7-row Arrow batches,
+    and the same words with a null pl_vec under with_pl=False."""
+    from pyspark.sql import functions as F
+
+    from kapra_timeseries_anonymization_spark.functions.sax_udfs import (
+        sax_pl_udf,
+    )
+
+    rows = _sax_mix()
     df = spark.createDataFrame(
         [(i, r) for i, r in enumerate(rows)], "id long, values array<double>"
     )
     levels = [1, 2] + list(range(3, 21))
-    got = (
-        df.withColumn("_paa", sax_paa_expr("values"))
-        .select("id", sax_words_from_paa_expr("_paa", levels).alias("w"))
+
+    def run():
+        return (
+            df.select("id", sax_pl_udf(levels)(F.col("values")).alias("s"))
+            .orderBy("id")
+            .collect()
+        )
+
+    got = run()
+    bare = (
+        df.select("id", sax_pl_udf(levels, with_pl=False)(F.col("values"))
+                  .alias("s"))
         .orderBy("id")
         .collect()
     )
-    want = (
-        df.select("id", make_sax_levels_udf(levels)(F.col("values")).alias("w"))
-        .orderBy("id")
-        .collect()
-    )
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "7")
+    try:
+        small = run()
+    finally:
+        spark.conf.set(conf, old)
+    block = np.array(rows)
+    want = sax_all_levels_block(block, levels)
     assert len(got) == len(rows)
-    for g, w in zip(got, want):
-        assert list(g["w"]) == list(w["w"]), (g["id"], g["w"], w["w"])
+    for g, g7, gb in zip(got, small, bare):
+        i, s = g["id"], g["s"]
+        assert list(s["sax_vec"]) == [want[lv][i] for lv in levels], i
+        assert list(s["pl_vec"]) == list(g7["s"]["pl_vec"]), i
+        assert list(gb["s"]["sax_vec"]) == list(s["sax_vec"]), i
+        assert gb["s"]["pl_vec"] is None, i
+        for lv, pl in zip(levels, s["pl_vec"]):
+            exp = (pattern_loss_single(block[i], want[lv][i], lv)
+                   if lv >= 3 else 1.0)
+            assert abs(pl - exp) <= 1e-12, (i, lv, pl, exp)

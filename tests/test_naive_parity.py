@@ -43,22 +43,22 @@ def test_mondrian_matches_oracle(spark, n_rows, seed, K, P, max_level):
         assert got_members == members, f"group {gid} mismatch"
 
 
-@pytest.mark.parametrize("n_rows,seed,K,P,max_level", CONFIGS)
-def test_naive_spark_matches_oracle(spark, n_rows, seed, K, P, max_level):
-    df = generate_legacy_dataset(n_rows, seed=seed)
-    series = series_matrix(df)
-    oracle = naive_pipeline(series.astype(np.int64), K=K, P=P, max_level=max_level)
+def _check_naive(spark, series, K, P, max_level, **switches):
+    """naive_anonymize == the numpy oracle: row order, GroupIDs, patterns,
+    levels, envelopes and leaf VL exactly; average VL/PL within 1e-9."""
+    oracle = naive_pipeline(series.astype(np.int64), K=K, P=P,
+                            max_level=max_level)
     got = naive_anonymize(
-        _to_spark(spark, series.astype(float)), K=K, P=P, max_level=max_level, t=8
+        _to_spark(spark, series.astype(float)), K=K, P=P,
+        max_level=max_level, t=series.shape[1], **switches,
     )
     rows = got.records.orderBy("group_id", "leaf_seq", "row_ord").collect()
     assert [r["original_index"] for r in rows] == oracle.record_index
     assert [r["group_id"] for r in rows] == oracle.group_id
     assert [r["pattern"] for r in rows] == oracle.pattern
     assert [r["level"] for r in rows] == oracle.level
-    for r, lo, hi, vl, pl_ok in zip(
+    for r, lo, hi, vl in zip(
         rows, oracle.leaf_lower, oracle.leaf_upper, oracle.leaf_vl,
-        range(len(rows)),
     ):
         np.testing.assert_array_equal(np.array(r["lower"]), lo)
         np.testing.assert_array_equal(np.array(r["upper"]), hi)
@@ -66,6 +66,26 @@ def test_naive_spark_matches_oracle(spark, n_rows, seed, K, P, max_level):
     assert abs(got.avg_vl - oracle.avg_vl) < 1e-9
     assert abs(got.avg_pl - oracle.avg_pl) < 1e-9
     assert got.n_groups == max(oracle.group_id)
+    got.records.unpersist()
+
+
+# (local_threshold, rank_head_rows) pairs that select distinct Mondrian
+# paths before the fused Arrow pass (see the equivalence test below)
+SWITCHES = [(0, 0), (0, 1), (64, 64), (100000, 0)]
+
+
+@pytest.mark.parametrize(
+    "n_rows,seed,K,P,max_level,switches",
+    [pytest.param(*c, (), id="-".join(map(str, c))) for c in CONFIGS]
+    + [pytest.param(*c, sw, id="-".join(map(str, c + sw)))
+       for c in CONFIGS for sw in SWITCHES],
+)
+def test_naive_spark_matches_oracle(spark, n_rows, seed, K, P, max_level,
+                                    switches):
+    df = generate_legacy_dataset(n_rows, seed=seed)
+    series = series_matrix(df)
+    kw = dict(zip(("local_threshold", "rank_head_rows"), switches))
+    _check_naive(spark, series, K, P, max_level, **kw)
 
 
 def test_naive_3000_defaults_matches_reference_metrics(spark):
@@ -114,3 +134,77 @@ def test_mondrian_local_finish_equals_distributed(spark, threshold, rank_rows):
         got_members = [i for _, i in sorted(by_gid[gid])]
         assert got_members == members, (
             f"group {gid} mismatch (thr={threshold}, rr={rank_rows})")
+
+
+def test_naive_zero_spread_pid(spark):
+    """All series identical: Mondrian never splits (zero spread), so one
+    pid carries every row into the fused pass, distributed or local."""
+    series = np.tile(np.array([3, 1, 4, 1, 5, 9, 2, 6]), (40, 1))
+    _check_naive(spark, series, K=8, P=2, max_level=10)
+    _check_naive(spark, series, K=8, P=2, max_level=10, local_threshold=0)
+
+
+def test_naive_more_buckets_than_pids(spark):
+    """20 rows, K=8: one live pid after round 0 and 16 hash buckets, so
+    most buckets get no rows; an empty Arrow table yields an empty one."""
+    import pyarrow as pa
+
+    from kapra_timeseries_anonymization_spark.operators.naive import (
+        _SPLIT_ARROW,
+        _make_node_split_fn,
+    )
+
+    series = series_matrix(generate_legacy_dataset(20, seed=5))
+    _check_naive(spark, series, K=8, P=2, max_level=10)
+    empty = pa.table({"original_index": pa.array([], pa.int64()),
+                      "values": pa.array([], pa.list_(pa.float64())),
+                      "pid": pa.array([], pa.string()),
+                      "pos": pa.array([], pa.int64())})
+    out = _make_node_split_fn(8, 2, 10, 4)(empty)
+    assert out.num_rows == 0 and out.schema == _SPLIT_ARROW
+
+
+def test_naive_several_pids_in_one_bucket():
+    """One Arrow table holding several pids (rows shuffled) gives the same
+    leaves as one table per pid."""
+    import pyarrow as pa
+
+    from kapra_timeseries_anonymization_spark.operators.naive import (
+        _make_node_split_fn,
+    )
+
+    series = series_matrix(generate_legacy_dataset(90, seed=11)).astype(float)
+    pids = np.array(["r:0", "r:10", "r:11"])[np.arange(90) % 3]
+    pos = np.arange(90) // 3 + 1
+    perm = np.random.default_rng(0).permutation(90)
+
+    def table(sel):
+        return pa.table({
+            "original_index": pa.array(sel, pa.int64()),
+            "values": pa.array([list(series[i]) for i in sel],
+                               pa.list_(pa.float64())),
+            "pid": pa.array(pids[sel]),
+            "pos": pa.array(pos[sel], pa.int64()),
+        })
+
+    fn = _make_node_split_fn(8, 2, 10, 4)
+    key = ["pid", "leaf_seq", "row_ord"]
+    both = fn(table(perm)).sort_by([(c, "ascending") for c in key])
+    one = pa.concat_tables(
+        [fn(table(np.flatnonzero(pids == p))) for p in ("r:0", "r:10", "r:11")]
+    ).sort_by([(c, "ascending") for c in key])
+    assert both.num_rows == 90
+    assert both.equals(one)
+
+
+def test_naive_segments_not_divisible(spark):
+    """t=10 with 4 segments: PAA uses array_split bounds (3, 3, 2, 2)."""
+    rng = np.random.default_rng(4)
+    series = rng.integers(0, 40, size=(150, 10))
+    _check_naive(spark, series, K=6, P=2, max_level=8)
+
+
+def test_naive_k_above_row_count(spark):
+    """K greater than the row count: Mondrian keeps one partition."""
+    series = series_matrix(generate_legacy_dataset(5, seed=2))
+    _check_naive(spark, series, K=8, P=2, max_level=10)
