@@ -11,7 +11,9 @@ and encoded by `encode_chunk`, with no pandas frame per chunk.
 Scale/skew stance: chunk_idx is a tumbling time bucket, so a pathologically
 long conversation is split across many bounded chunks instead of one giant
 group and no salting is needed here (the time axis IS the salt).
-Decompression is mapInPandas (pure per-chunk fan-out, no shuffle at all).
+Decompression is a mapInArrow pass (pure per-chunk fan-out, no shuffle at
+all): payloads decode into numpy arrays, the key columns are expanded with
+one Arrow take per batch, and no pandas frame is built.
 """
 
 from __future__ import annotations
@@ -19,7 +21,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -108,24 +109,29 @@ def decompress_chunks(
          T.StructField(value_col, T.DoubleType())]
     )
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            # column-wise zip (no iterrows): one python iteration per
-            # CHUNK; the per-point work is vectorized in decode_chunk
-            frames = []
-            key_cols = {k: pdf[k].to_numpy() for k in keys}
-            for i, payload in enumerate(pdf["payload"].to_numpy()):
-                ts, vals = decode_chunk(bytes(payload))
-                d = {k: np.repeat(col[i], len(ts)) for k, col in key_cols.items()}
-                d[ts_col] = pd.to_datetime(ts, unit="us")
-                d[value_col] = vals
-                frames.append(pd.DataFrame(d))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+    arrow_schema = to_arrow_schema(out_schema)
 
-    return chunks.select(*keys, "payload").mapInPandas(decode, out_schema)
+    def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            # one python iteration per CHUNK; the per-point work is
+            # vectorized in decode_chunk, and the key columns are
+            # expanded by one Arrow take per batch
+            decoded = [decode_chunk(p)
+                       for p in batch.column("payload").to_pylist()]
+            lens = [len(ts) for ts, _ in decoded]
+            rows = pa.array(np.repeat(np.arange(batch.num_rows), lens))
+            yield pa.RecordBatch.from_arrays(
+                [*(batch.column(k).take(rows) for k in keys),
+                 pa.array(np.concatenate([ts for ts, _ in decoded]),
+                          type=arrow_schema.field(ts_col).type),
+                 # NaN -> null, as the compressor stored nulls as NaN
+                 pa.array(np.concatenate([v for _, v in decoded]),
+                          from_pandas=True)],
+                schema=arrow_schema)
+
+    return chunks.select(*keys, "payload").mapInArrow(decode, out_schema)
 
 
 def chunk_stats(chunks: DataFrame, keys: list[str] = ()) -> DataFrame:

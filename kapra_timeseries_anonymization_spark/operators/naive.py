@@ -16,15 +16,16 @@ Semantics: exact match to the reference
   through rounds, so rejected/terminal partitions keep the same member
   order the in-place sorts would have produced.
 - The Mondrian finish, Phase 2 (node splitting) and Phase 3 (bad-leaf
-  absorption) run in ONE grouped ``applyInArrow`` pass over hash buckets
-  of live pids (_make_node_split_fn): each bucket finishes Mondrian in
-  numpy (_mondrian_finish, bit-identical stable-sort semantics), then
-  runs the reference's recursive tree on every leaf — every k-group is
-  small (Mondrian stops below 2k) — including child_merge freezing,
-  in-place level maximization, '*' merged-all leaf, strict-<
-  nearest-good-leaf absorption, and dropped-records edge when no good
-  leaf is reachable. Records carry their leaf pid; GroupID is the rank
-  of the distinct leaf pids, joined back.
+  absorption) run in ONE grouped ``applyInArrow`` pass over range buckets
+  of live pids (_by_bucket, _make_node_split_fn): each bucket finishes
+  Mondrian in numpy (_mondrian_finish, bit-identical stable-sort
+  semantics), then runs the reference's recursive tree on every leaf —
+  every k-group is small (Mondrian stops below 2k) — including
+  child_merge freezing, in-place level maximization, '*' merged-all leaf,
+  strict-< nearest-good-leaf absorption, and dropped-records edge when no
+  good leaf is reachable. Records carry their bucket and their leaf's
+  index in it; GroupID = the bucket's offset + that index + 1
+  (_numbered_pass).
 
 Scale: rounds are bounded and data-parallel (one window shuffle each over
 a shrinking live set); the only driver state is per-partition stats. The
@@ -39,16 +40,13 @@ numpy-oracle equivalence test at thresholds {0, 64, 100000} and the
 
 r05 head parallelism: while the largest live partition exceeds
 ``rank_head_rows`` (default 4M rows) the per-pid median-split row
-number is a range-partitioned two-stage rank instead of
-``Window.partitionBy("pid")`` — round 0 has ONE pid, so the plain
-window sorted the ENTIRE input in one task (measured ~25 min of the
-100M run in round 0 alone). See HEAD PARALLELISM in
-:func:`_mondrian_rounds`; gated by the same numpy-oracle equivalence
-test at thresholds {0 (never), 1 (always)}.
+number is a range-partitioned two-stage rank (HEAD PARALLELISM in
+:func:`_mondrian_rounds`), gated by the same equivalence test.
 """
 
 from __future__ import annotations
 
+import functools
 import itertools
 import math
 from dataclasses import dataclass
@@ -56,7 +54,7 @@ from dataclasses import dataclass
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -71,7 +69,6 @@ from ..functions.kernels import (
 from ..functions.sax_udfs import arrow_block, list_array
 from ..plans.lifetime import register_checkpoint
 from .kapra import _release_local_checkpoint
-from .rank import distributed_rank
 
 #: per-invocation plan-uniquing token (see the root-pid comment in
 #: _mondrian_rounds). A process-local counter is enough: aliasing only
@@ -92,17 +89,17 @@ class NaiveGroups:
     n_groups: int
 
 
-def _mondrian_finish(series: np.ndarray, k: int) -> list[tuple[np.ndarray, str]]:
+def _mondrian_finish(series: np.ndarray, k: int) -> list[np.ndarray]:
     """Finish Mondrian in memory for one pid whose rows are given in
     ``pos`` order: the same recursion as the distributed rounds —
     first-argmax spread column, floor(n/2) stable median split ordered by
     (value, pos), stop below 2k or at zero spread. Returns the leaves in
-    DFS (lhs-first) order as (row positions in the leaf's own pos order,
-    pid suffix)."""
+    DFS (lhs-first) order, each as its row positions in the leaf's own
+    pos order."""
     leaves = []
-    stack = [(np.arange(len(series)), "")]
+    stack = [np.arange(len(series))]
     while stack:
-        rows, suffix = stack.pop()
+        rows = stack.pop()
         n = len(rows)
         if n >= 2 * k:
             sub = series[rows]
@@ -113,17 +110,17 @@ def _mondrian_finish(series: np.ndarray, k: int) -> list[tuple[np.ndarray, str]]
                 # column == the distributed orderBy(_kv, pos)
                 order = np.argsort(sub[:, ci], kind="stable")
                 mid = n // 2
-                stack.append((rows[order[mid:]], suffix + "1"))
-                stack.append((rows[order[:mid]], suffix + "0"))
+                stack.append(rows[order[mid:]])
+                stack.append(rows[order[:mid]])
                 continue
-        leaves.append((rows, suffix))
+        leaves.append(rows)
     return leaves
 
 
 def _finished_leaves(table: pa.Table, k: int):
     """Sort one bucket by (pid, pos) and finish Mondrian for each of its
     pids. Returns the sorted table, its (n, t) series block and the
-    leaves as (bucket row positions, leaf pid)."""
+    leaves' bucket row positions in (pid, DFS) order == leaf pid order."""
     table = table.sort_by([("pid", "ascending"), ("pos", "ascending")])
     pid = table.column("pid").combine_chunks()
     n = len(pid)
@@ -132,9 +129,7 @@ def _finished_leaves(table: pa.Table, k: int):
     series = arrow_block(table.column("values"))
     leaves = []
     for s, e in zip([0, *cut.tolist()], [*cut.tolist(), n]):
-        root = pid[s].as_py()
-        leaves += [(rows + s, root + suffix)
-                   for rows, suffix in _mondrian_finish(series[s:e], k)]
+        leaves += [rows + s for rows in _mondrian_finish(series[s:e], k)]
     return table, series, leaves
 
 
@@ -211,25 +206,25 @@ def _make_node_split_fn(K: int, P: int, max_level: int, n_segments: int):
     every leaf (k-group) the node-split tree, absorption, envelope and
     PL. SAX words for levels 1..max_level are computed once per bucket,
     every record's PL comes from one block call and the output columns
-    are built from numpy; each record carries its leaf pid, from which
-    GroupID is ranked downstream."""
+    are built from numpy; each record carries its bucket ``_b`` and its
+    leaf's local index ``gl``, from which GroupID is numbered downstream."""
     levels = list(range(1, max_level + 1))
 
-    def run(table: pa.Table) -> pa.Table:
+    def run(key: tuple, table: pa.Table) -> pa.Table:
         if table.num_rows == 0:
             return _SPLIT_ARROW.empty_table()
         table, series, leaves = _finished_leaves(table, K)
         words = {lv: w.tolist() for lv, w in
                  sax_all_levels_block(series, levels, n_segments).items()}
-        rows, pattern, level, seq, pid = [], [], [], [], []
-        for members, leaf_pid in leaves:
+        rows, pattern, level, seq, gl = [], [], [], [], []
+        for g, members in enumerate(leaves):
             good = _split_group(members.tolist(), words, series, P, max_level)
             for i, (rs, pat, lvl) in enumerate(good):
                 rows.append(rs)
                 pattern.append(pat)
                 level.append(lvl)
                 seq.append(i)
-                pid.append(leaf_pid)
+                gl.append(g)
         lens = np.array([len(r) for r in rows], dtype=np.int64)
         starts = np.cumsum(lens) - lens
         idx = np.fromiter(itertools.chain.from_iterable(rows), np.int64,
@@ -256,7 +251,8 @@ def _make_node_split_fn(K: int, P: int, max_level: int, n_segments: int):
             list_array(np.repeat(lo, lens, axis=0).ravel(), sub.shape[1]),
             list_array(np.repeat(hi, lens, axis=0).ravel(), sub.shape[1]),
             np.repeat(vl4, lens), pl,
-            np.repeat(np.asarray(pid, dtype=object), lens),
+            np.full(len(idx), key[0].as_py(), dtype=np.int32),
+            np.repeat(np.asarray(gl, dtype=np.int32), lens),
         ]
         return pa.Table.from_arrays(
             [pa.array(c, type=f.type) for c, f in zip(cols, _SPLIT_ARROW)],
@@ -267,23 +263,23 @@ def _make_node_split_fn(K: int, P: int, max_level: int, n_segments: int):
 
 def _make_finish_fn(k: int):
     """Arrow pass per bucket for :func:`mondrian_partition`: the Mondrian
-    finish alone, one output row per input row with its leaf pid and its
-    1-based position in the leaf's member order."""
+    finish alone, one output row per input row with its 1-based position
+    in the leaf's member order, its bucket and its leaf's local index."""
 
-    def run(table: pa.Table) -> pa.Table:
+    def run(key: tuple, table: pa.Table) -> pa.Table:
         if table.num_rows == 0:
             return _FINISH_ARROW.empty_table()
         table, _, leaves = _finished_leaves(table, k)
-        idx = np.concatenate([rows for rows, _ in leaves])
-        lens = np.array([len(rows) for rows, _ in leaves])
+        idx = np.concatenate(leaves)
+        lens = np.array([len(rows) for rows in leaves])
         starts = np.cumsum(lens) - lens
         return pa.Table.from_arrays([
             table.column("original_index").combine_chunks().take(idx),
             table.column("values").combine_chunks().take(idx),
-            pa.array(np.repeat(np.array([p for _, p in leaves], dtype=object),
-                               lens), type=pa.string()),
             pa.array(np.arange(len(idx)) - np.repeat(starts, lens) + 1,
                      type=pa.int64()),
+            pa.array(np.full(len(idx), key[0].as_py()), type=pa.int32()),
+            pa.array(np.repeat(np.arange(len(leaves)), lens), type=pa.int32()),
         ], schema=_FINISH_ARROW)
 
     return run
@@ -292,8 +288,9 @@ def _make_finish_fn(k: int):
 _FINISH_SCHEMA = T.StructType([
     T.StructField("original_index", T.LongType()),
     T.StructField("values", T.ArrayType(T.DoubleType())),
-    T.StructField("pid", T.StringType()),
     T.StructField("pos", T.LongType()),
+    T.StructField("_b", T.IntegerType()),
+    T.StructField("gl", T.IntegerType()),
 ])
 _SPLIT_SCHEMA = T.StructType([
     T.StructField("original_index", T.LongType()),
@@ -305,7 +302,8 @@ _SPLIT_SCHEMA = T.StructType([
     T.StructField("upper", T.ArrayType(T.DoubleType())),
     T.StructField("vl", T.DoubleType()),
     T.StructField("pl", T.DoubleType()),
-    T.StructField("pid", T.StringType()),
+    T.StructField("_b", T.IntegerType()),
+    T.StructField("gl", T.IntegerType()),
 ])
 _FINISH_ARROW = to_arrow_schema(_FINISH_SCHEMA)
 _SPLIT_ARROW = to_arrow_schema(_SPLIT_SCHEMA)
@@ -552,15 +550,49 @@ def _mondrian_rounds(
 
 
 def _by_bucket(parts: list[DataFrame], n_head: int):
-    """The round slices grouped into hash buckets of pid for one Arrow
+    """The round slices grouped into range buckets of pid for one Arrow
     pass: enough buckets to fill the cluster, and about 64k rows each
-    when round 0 saw more. A pid never straddles two buckets."""
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+    when round 0 saw more. The bucket is floor(f * n_buckets) for f the
+    first 30 path bits after the root token (0-padded) as a binary
+    fraction, so it never decreases as the pid grows: leaf pids are
+    prefix-free, so pids that differ within those bits order as their
+    fractions do, and pids that agree on them share a bucket, where the
+    in-bucket sort orders them. Median splits keep row mass uniform over
+    fraction space, so buckets stay balanced."""
+    out = functools.reduce(DataFrame.unionByName, parts)
     para = out.sparkSession.sparkContext.defaultParallelism
     n_buckets = max(para * 4, -(-n_head // 65536))
-    return out.groupBy(F.pmod(F.hash("pid"), F.lit(n_buckets)).alias("_b"))
+    path = F.substring(F.substring_index("pid", ":", -1), 1, 30)
+    frac = F.conv(F.rpad(path, 30, "0"), 2, 10).cast("long")
+    return out.groupBy(
+        F.shiftright(frac * n_buckets, 30).cast("int").alias("_b"))
+
+
+def _numbered_pass(parts: list[DataFrame], n_head: int, fn, schema,
+                   **sums) -> tuple[DataFrame, Column, int, dict]:
+    """The Arrow pass ``fn`` over the round slices, numbered by one small
+    job: per bucket, its leaf count and ``sums``. Buckets are monotone in
+    pid order (:func:`_by_bucket`), so a bucket's offset (the leaf counts
+    of all lower buckets) + ``gl`` + 1 is the leaf's rank in pid order
+    == the reference's DFS (lhs-first) enumeration (k_anon.py:116-119).
+    Releases the slices; returns the pass's output (a localCheckpoint
+    for the caller to release), that group_id column, the number of
+    groups and ``sums`` totalled over the buckets."""
+    # lazy: the per-bucket job below runs the Arrow pass once
+    leaves = (_by_bucket(parts, n_head).applyInArrow(fn, schema)
+              .localCheckpoint(eager=False))
+    rows = leaves.groupBy("_b").agg(
+        (F.max("gl") + 1).alias("_g"), *[c.alias(n) for n, c in sums.items()]
+    ).collect()
+    for p in parts:
+        _release_local_checkpoint(p)
+    counts = {r["_b"]: r["_g"] for r in rows}
+    offsets = itertools.accumulate(
+        (counts.get(b, 0) for b in range(max(counts, default=0))), initial=0)
+    group_id = F.element_at(F.array(*map(F.lit, offsets)).cast("array<long>"),
+                            F.col("_b") + 1) + F.col("gl") + 1
+    totals = {n: math.fsum(r[n] for r in rows) for n in sums}
+    return leaves, group_id.alias("group_id"), sum(counts.values()), totals
 
 
 def mondrian_partition(
@@ -572,32 +604,17 @@ def mondrian_partition(
     local_threshold: int = 65536,
     rank_head_rows: int = 4_000_000,
 ) -> DataFrame:
-    """Reference-exact Mondrian: returns (pid, original_index, values,
-    pos, group_id) where pid is the leaf path and group_id the 1-based
-    DFS rank. The rounds and their two switches are those of
-    :func:`_mondrian_rounds`; the finish is the numpy one that
-    :func:`naive_anonymize` fuses with the node split."""
+    """Reference-exact Mondrian: returns (original_index, values, pos,
+    group_id): pos is the 1-based place in the leaf's member order,
+    group_id the leaf's 1-based DFS rank. The rounds and their two
+    switches are those of :func:`_mondrian_rounds`; the finish is the
+    numpy one that :func:`naive_anonymize` fuses with the node split."""
     parts, n_head = _mondrian_rounds(df, values_col, index_col, k, t,
                                      local_threshold, rank_head_rows)
-    leaves = (
-        _by_bucket(parts, n_head)
-        .applyInArrow(_make_finish_fn(k), _FINISH_SCHEMA)
-        .localCheckpoint(eager=True)
-    )
-    for p in parts:
-        _release_local_checkpoint(p)
+    leaves, group_id, _, _ = _numbered_pass(parts, n_head, _make_finish_fn(k),
+                                            _FINISH_SCHEMA)
     register_checkpoint(leaves)
-    return leaves.join(_group_ids(leaves), "pid")
-
-
-def _group_ids(leaves: DataFrame) -> DataFrame:
-    """(pid, group_id). Leaf pids are prefix-free, so lexicographic order
-    == the reference's DFS (lhs-first) enumeration order
-    (k_anon.py:116-119); pids are pure-ASCII '0'/'1'/'r'/digits/':', so
-    Spark's binary string ordering == the reference's code-point sort.
-    The rank is two-stage (operators/rank.py), not a single-task
-    Window.orderBy: G = O(N/k) distinct pids grows with the data."""
-    return distributed_rank(leaves.select("pid").distinct(), "pid", "group_id")
+    return leaves.select("original_index", "values", "pos", group_id)
 
 
 def naive_anonymize(
@@ -626,39 +643,21 @@ def naive_anonymize(
     (same call sites, `spark.sparkContext.setCheckpointDir`)."""
     parts, n_head = _mondrian_rounds(df, values_col, index_col, K, t,
                                      local_threshold, rank_head_rows)
-    # eager: the pid rank and the join below both read it, and the Arrow
-    # pass must run once
-    leaves = (
-        _by_bucket(parts, n_head)
-        .applyInArrow(_make_node_split_fn(K, P, max_level, n_segments),
-                      _SPLIT_SCHEMA)
-        .localCheckpoint(eager=True)
+    leaves, group_id, n_groups, tot = _numbered_pass(
+        parts, n_head, _make_node_split_fn(K, P, max_level, n_segments),
+        _SPLIT_SCHEMA,
+        sv=F.sum("vl"),
+        sp=F.sum(F.when(F.isnan("pl"), 0.0).otherwise(F.col("pl"))),
+        c=F.count(F.lit(1)),
     )
-    for p in parts:
-        _release_local_checkpoint(p)
-    gid_map = _group_ids(leaves)
-    records = (
-        leaves.join(gid_map, "pid")
-        .select("original_index", "leaf_seq", "row_ord", "pattern", "level",
-                "lower", "upper", "vl", "pl", "group_id")
-        .persist()
-    )
-    row = records.agg(
-        F.sum("vl").alias("sv"),
-        F.sum(F.when(F.isnan("pl"), 0.0).otherwise(F.col("pl"))).alias("sp"),
-        F.count(F.lit(1)).alias("c"),
-        F.countDistinct("group_id").alias("g"),
-    ).first()
-    # records is materialized in the cache now — release the GroupID rank
-    # cache and the leaf checkpoint it read (lifetime rule: a
-    # localCheckpoint is released only after every cache built over it is
-    # either released or fully materialized; see _release_local_checkpoint
-    # in operators/kapra.py). After this point a `records` eviction
-    # cannot be recomputed — acceptable for the local/bench deployment
-    # (MEMORY_AND_DISK spills rather than drops); a production cluster
-    # run would use reliable checkpoints for fault tolerance.
-    gid_map._rank_cache.unpersist()
+    records = leaves.select(
+        "original_index", "leaf_seq", "row_ord", "pattern", "level",
+        "lower", "upper", "vl", "pl", group_id,
+    ).persist()
+    records.count()
+    # records is materialized: release the leaf checkpoint it read (the
+    # lifetime rule at _release_local_checkpoint in operators/kapra.py;
+    # the fault-tolerance note above says what this gives up)
     _release_local_checkpoint(leaves)
-    avg_vl = (row["sv"] or 0.0) / row["c"] if row["c"] else 0.0
-    avg_pl = (row["sp"] or 0.0) / row["c"] if row["c"] else 0.0
-    return NaiveGroups(records, avg_vl, avg_pl, int(row["g"]))
+    c = tot["c"] or 1.0  # no records: both averages are 0
+    return NaiveGroups(records, tot["sv"] / c, tot["sp"] / c, n_groups)

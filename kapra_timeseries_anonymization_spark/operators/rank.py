@@ -3,9 +3,9 @@ single-task window.
 
 ``Window.orderBy(col)`` with no partitionBy collapses the whole input into
 ONE task — fine for a few thousand rows, a linear-in-N bottleneck for the
-Mondrian GroupID map (G = O(N/k) distinct pids, ~1.2e7 rows at 1e8 series)
-and the distributed-KAPRA per-pass group ranks (VERDICT r02 "What's wrong"
-#3). This helper computes the identical rank in three bounded steps:
+distributed-KAPRA per-pass group ranks (VERDICT r02 "What's wrong" #3) and
+the corpus-shuffle/packing queries. This helper computes the identical
+rank in three bounded steps:
 
 1. ``repartitionByRange(n, col)`` — Spark's RangePartitioner contract puts
    ascending key ranges in ascending partition ids, so global order ==
@@ -24,8 +24,7 @@ Two partitioning strategies:
   counts branch and the rank branch must see ONE boundary assignment,
   the ranged intermediate is persisted and the cache handed back via
   ``_rank_cache`` for the caller to release once its downstream result
-  is materialized (same discipline as mondrian_partition's
-  ``_mondrian_cache``).
+  is materialized.
 - ``hex_key=True`` (keys are fixed-length lowercase-hex strings, e.g.
   md5): the partition id is computed FROM the key — the first 4 hex
   chars scaled into [0, n). That mapping is a pure, monotone function

@@ -26,11 +26,13 @@ Resume contract:
 Scale: each call reads the lineage log once (schema declared, no
 inference job) and collects every tier's completed partition keys to the
 driver: one small row per (tier, day), so thousands of days stay far below
-driver memory. The incremental filter is then a plain `p_date` predicate,
-which the optimizer pushes below the rollup's aggregate, so completed days
-are dropped before the shuffle; on Iceberg the same predicate is partition
-pruning, i.e. file skipping, not a scan. Lineage rows are appended from an
-Arrow table built on the driver, so no Python worker touches them.
+driver memory. The incremental filter is then a plain `p_date` predicate.
+On the raw tier the optimizer pushes it below the rollup's aggregate, so
+completed days are dropped before the shuffle; every later tier applies
+it to the stored previous tier's own `p_date` partition column, which is
+partition pruning, i.e. file skipping, not a scan (on Iceberg too).
+Lineage rows are appended from an Arrow table built on the driver, so no
+Python worker touches them.
 
 Iceberg status (r02 attempt, documented per VERDICT r01 #6): executing
 the real Iceberg branch requires the `iceberg-spark-runtime` jar; this
@@ -152,18 +154,23 @@ def materialize_cascade(
     prev: DataFrame | None = None
     for tier in tiers:
         sec = TIER_SECONDS[tier]
+        skip = sorted(done.get(tier, ()))
+        # null p_date is kept, as a null never matches a completed key;
+        # None stays out of the list, where it would null every miss
+        todo_day = F.col("p_date").isNull() | ~F.col("p_date").isin(skip)
         if prev is None:
             cur = rollup_raw(source, keys, ts_col, value_col, sec)
         else:
-            cur = rollup_tier(prev, keys, sec)
+            # The STORED previous tier is filtered on its own p_date, so
+            # the file index prunes completed days instead of rolling them
+            # up. Exact: buckets are epoch-aligned, every tier's width
+            # divides 86400 and the session timezone is UTC (session.py),
+            # so a coarse bucket lies on the same day as its fine rows.
+            cur = rollup_tier(prev.filter(todo_day) if skip else prev,
+                              keys, sec)
         cur = cur.withColumn("p_date", F.to_date("bucket").cast("string"))
-        if done.get(tier):
-            # null p_date is kept, as a null never matches a completed key;
-            # None stays out of the list, where it would null every miss
-            cur = cur.filter(
-                F.col("p_date").isNull()
-                | ~F.col("p_date").isin(sorted(done[tier]))
-            )
+        if prev is None and skip:
+            cur = cur.filter(todo_day)
 
         tier_path = os.path.join(base_dir, tier)
         # localCheckpoint: the tier is both summarized for lineage AND
@@ -182,5 +189,5 @@ def materialize_cascade(
         written_counts[tier] = lineage.num_rows
         # next tier reads the STORED table (resumed runs see old+new rows),
         # with the schema just written, so no inference job runs
-        prev = spark.read.schema(todo.schema).parquet(tier_path).drop("p_date")
+        prev = spark.read.schema(todo.schema).parquet(tier_path)
     return written_counts

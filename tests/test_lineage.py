@@ -244,8 +244,9 @@ def test_null_timestamps_on_fresh_run_and_resume(spark, events, tmp_path):
 
 def test_cascade_job_counts(spark, events, tmp_path):
     """Spark jobs per call, read with the job group's tracker: a fresh
-    3-tier cascade runs 15 and a no-op resume 4 (the lineage read plus
-    one empty rollup per tier); the bounds leave headroom for AQE."""
+    3-tier cascade runs 15 and a no-op resume 2 (the lineage read plus
+    the raw tier's empty rollup; the stored tiers' completed days are
+    pruned from the file index); the bounds leave headroom for AQE."""
     base = str(tmp_path / "tiers")
     sc = spark.sparkContext
     jobs = {}
@@ -261,4 +262,4 @@ def test_cascade_job_counts(spark, events, tmp_path):
             sc.setLocalProperty("spark.job.description", None)
         jobs[run_id] = len(sc.statusTracker().getJobIdsForGroup(
             f"cascade-{run_id}"))
-    assert jobs["fresh"] <= 20 and jobs["resume"] <= 6, jobs
+    assert jobs["fresh"] <= 20 and jobs["resume"] <= 3, jobs

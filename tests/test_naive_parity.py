@@ -145,7 +145,7 @@ def test_naive_zero_spread_pid(spark):
 
 
 def test_naive_more_buckets_than_pids(spark):
-    """20 rows, K=8: one live pid after round 0 and 16 hash buckets, so
+    """20 rows, K=8: one live pid after round 0 and 16 range buckets, so
     most buckets get no rows; an empty Arrow table yields an empty one."""
     import pyarrow as pa
 
@@ -160,14 +160,16 @@ def test_naive_more_buckets_than_pids(spark):
                       "values": pa.array([], pa.list_(pa.float64())),
                       "pid": pa.array([], pa.string()),
                       "pos": pa.array([], pa.int64())})
-    out = _make_node_split_fn(8, 2, 10, 4)(empty)
+    out = _make_node_split_fn(8, 2, 10, 4)((pa.scalar(3, pa.int32()),), empty)
     assert out.num_rows == 0 and out.schema == _SPLIT_ARROW
 
 
 def test_naive_several_pids_in_one_bucket():
     """One Arrow table holding several pids (rows shuffled) gives the same
-    leaves as one table per pid."""
+    leaves as one table per pid, its local leaf numbers continuing across
+    the pids in pid order, and every record carries the bucket key."""
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     from kapra_timeseries_anonymization_spark.operators.naive import (
         _make_node_split_fn,
@@ -188,13 +190,82 @@ def test_naive_several_pids_in_one_bucket():
         })
 
     fn = _make_node_split_fn(8, 2, 10, 4)
-    key = ["pid", "leaf_seq", "row_ord"]
-    both = fn(table(perm)).sort_by([(c, "ascending") for c in key])
-    one = pa.concat_tables(
-        [fn(table(np.flatnonzero(pids == p))) for p in ("r:0", "r:10", "r:11")]
-    ).sort_by([(c, "ascending") for c in key])
-    assert both.num_rows == 90
-    assert both.equals(one)
+    key = (pa.scalar(5, pa.int32()),)
+    order = [(c, "ascending") for c in ("gl", "leaf_seq", "row_ord")]
+    both = fn(key, table(perm)).sort_by(order)
+    ones, offset = [], 0
+    for p in ("r:0", "r:10", "r:11"):
+        one = fn(key, table(np.flatnonzero(pids == p)))
+        gl = pc.add(one.column("gl"), pa.scalar(offset, pa.int32()))
+        ones.append(one.set_column(one.schema.get_field_index("gl"), "gl", gl))
+        offset += pc.max(one.column("gl")).as_py() + 1
+    assert both.num_rows == 90 and offset > 3
+    assert both.equals(pa.concat_tables(ones).sort_by(order))
+    assert set(both.column("_b").to_pylist()) == {5}
+
+
+def _prefix_free_paths(rng, n_splits: int) -> list[str]:
+    """Leaves of a random binary tree (a prefix-free set of '0'/'1'
+    paths), one of them extended into a chain deeper than 30 bits so
+    several leaves share their first 30 bits."""
+    leaves = [""]
+    for _ in range(n_splits):
+        p = leaves.pop(int(rng.integers(len(leaves))))
+        leaves += [p + "0", p + "1"]
+    p = leaves.pop(int(rng.integers(len(leaves))))
+    for _ in range(40 - len(p)):
+        leaves.append(p + "1")
+        p += "0"
+    return leaves + [p]
+
+
+@pytest.mark.parametrize("n_buckets", [1, 1000, 1 << 20])
+def test_range_buckets_monotone(spark, n_buckets):
+    """Range buckets keep pid order: over random prefix-free pid sets
+    (and the bare root pid), sorting by (bucket, pid) == sorting by
+    pid, so per-bucket leaf numbers plus bucket offsets are the global
+    DFS rank. ``n_buckets`` is raised to the cluster's floor (4 slots
+    per core) by _by_bucket itself."""
+    from pyspark.sql import functions as F
+
+    from kapra_timeseries_anonymization_spark.operators.naive import (
+        _by_bucket,
+    )
+
+    n_buckets = max(n_buckets, 4 * spark.sparkContext.defaultParallelism)
+    rng = np.random.default_rng(n_buckets)
+    sets = [[""], ["0", "1"]] + [_prefix_free_paths(rng, n)
+                                 for n in (5, 60, 400)]
+    for paths in sets:
+        pids = [f"r17:{p}" for p in paths]
+        df = spark.createDataFrame([(p,) for p in pids], "pid string")
+        rows = _by_bucket([df], n_buckets * 65536).agg(
+            F.collect_list("pid").alias("pids")).collect()
+        got = sorted((r["_b"], p) for r in rows for p in r["pids"])
+        assert [p for _, p in got] == sorted(pids)
+        assert all(0 <= b < n_buckets for b, _ in got)
+        if len(paths) > 40:
+            deep = [b for b, p in got if len(p) > 35]
+            assert len(deep) > 1 and len(set(deep)) == 1
+
+
+def test_naive_job_count(spark):
+    """Spark jobs per naive_anonymize call on the 600-series fixture, read
+    with the job group's tracker: 11 (Mondrian's round-0 decision, the
+    Arrow pass, the per-bucket GroupID job and the records cache); the
+    bound leaves headroom for AQE."""
+    series = series_matrix(generate_legacy_dataset(600, seed=42))
+    df = _to_spark(spark, series.astype(float))
+    sc = spark.sparkContext
+    sc.setJobGroup("naive-jobs", "naive-jobs")
+    try:
+        got = naive_anonymize(df, K=8, P=2, max_level=10, t=8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("naive-jobs"))
+    got.records.unpersist()
+    assert n_jobs <= 13, n_jobs
 
 
 def test_naive_segments_not_divisible(spark):
