@@ -24,8 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.lifetime import register_checkpoint
-from .kapra import _release_local_checkpoint
+from ..plans.lifetime import _release_local_checkpoint, register_checkpoint
 
 
 def connected_components(

@@ -27,50 +27,35 @@ def _elementwise_agg(values_col: str, t: int, fn) -> Column:
     return F.array(*[fn(F.col(values_col).getItem(i)) for i in range(t)])
 
 
-def vl_expr(lower_col: str, upper_col: str) -> Column:
-    """VL = sqrt(sum((hi-lo)^2)/T) from envelope arrays (JVM-side fold)."""
-    sq = F.zip_with(F.col(upper_col), F.col(lower_col),
-                    lambda u, l: (u - l) * (u - l))
-    return F.sqrt(
-        F.aggregate(sq, F.lit(0.0), lambda acc, x: acc + x)
-        / F.size(F.col(lower_col))
-    )
-
-
 def envelope_agg(
-    df: DataFrame,
-    group_cols: list[str],
-    values_col: str,
-    t: int,
-    with_vl: bool = True,
+    df: DataFrame, group_cols: list[str], values_col: str, t: int, *extra: Column
 ) -> DataFrame:
-    """Per-group envelope summary: count, lower[], upper[] (+ vl).
+    """Per-group envelope summary: count, lower[], upper[], then ``extra``
+    aggregates in the same pass.
 
     One hash-aggregate shuffle keyed on ``group_cols``; everything stays in
     whole-stage codegen.
     """
-    agg = df.groupBy(*group_cols).agg(
+    return df.groupBy(*group_cols).agg(
         F.count(F.lit(1)).alias("count"),
         _elementwise_agg(values_col, t, F.min).alias("lower"),
         _elementwise_agg(values_col, t, F.max).alias("upper"),
+        *extra,
     )
-    if with_vl:
-        agg = agg.withColumn("vl", vl_expr("lower", "upper"))
-    return agg
 
 
 def merge_envelope_agg(
     df: DataFrame,
     group_cols: list[str],
     t: int,
-    count_col: str = "count",
-    lower_col: str = "lower",
-    upper_col: str = "upper",
+    *extra: Column,
 ) -> DataFrame:
     """Second-level merge of already-aggregated envelope summaries (exact:
-    min of mins / max of maxes / sum of counts)."""
+    min of mins / max of maxes / sum of counts), then ``extra`` aggregates
+    in the same pass."""
     return df.groupBy(*group_cols).agg(
-        F.sum(count_col).alias(count_col),
-        F.array(*[F.min(F.col(lower_col).getItem(i)) for i in range(t)]).alias(lower_col),
-        F.array(*[F.max(F.col(upper_col).getItem(i)) for i in range(t)]).alias(upper_col),
+        F.sum("count").alias("count"),
+        _elementwise_agg("lower", t, F.min).alias("lower"),
+        _elementwise_agg("upper", t, F.max).alias("upper"),
+        *extra,
     )

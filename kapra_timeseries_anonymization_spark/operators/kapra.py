@@ -18,7 +18,10 @@ pattern space, broadcast back":
    PAA once per record) -> `sax_vec`, and the record's pattern loss
    against its own word at each level -> `pl_vec`.
 2. ONE map-side-combinable aggregation groups records by their full
-   `sax_vec` into pattern *combos*: (count, min_index, envelope lo/hi).
+   `sax_vec` into pattern *combos*: (count, min_index, envelope lo/hi,
+   and the sum of `pl_vec` per level). Its rows are counted as they
+   reach the driver; past `max_driver_combos` the combos stay
+   distributed instead (`_kapra_distributed`).
    Records with identical sax vectors can never be separated by any phase
    of the reference algorithm, so combos are a lossless reduction. Shuffle
    volume is O(C * T) where C = #distinct vectors (bounded by the cross
@@ -27,10 +30,12 @@ pattern space, broadcast back":
    combo summaries, replaying the reference's dict-insertion order, stable
    sorts and strict-< argmin exactly (tuple keys simulate the reference's
    record-list ordering; a combo's records are contiguous in it).
-4. A tiny (vector -> group assignment) map is broadcast-joined back and
-   each record's PL is read from `pl_vec` at its group level: a record's
-   pattern is always its own word at that level (the '*' group uses the
-   level-3 word at level 3), so no Python runs after step 1.
+4. A record's pattern is always its own word at its group level (the
+   '*' group uses the level-3 word at level 3), so its PL is `pl_vec` at
+   that level and `avg_pl` is summed on the driver from the combos' PL
+   sums. A tiny (vector -> group assignment) map is broadcast-joined
+   back, and the persisted records are materialized by one count; no
+   Python runs after step 1.
 
 At 100 TB this is: one UDF scan (embarrassingly parallel), one tiny
 combined shuffle, one broadcast join — no iteration ever touches the data.
@@ -42,6 +47,7 @@ breakpoint-cell count (28^4 for levels 3..8).
 
 from __future__ import annotations
 
+import contextlib
 import itertools
 import math
 from dataclasses import dataclass
@@ -53,6 +59,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.sax_udfs import sax_pl_udf
+from ..plans.lifetime import _release_local_checkpoint
 from .envelope import envelope_agg, merge_envelope_agg
 from .rank import distributed_rank
 
@@ -158,43 +165,6 @@ def _greedy_min_vl_merge(
     ]
 
 
-def _release_local_checkpoint(df: DataFrame) -> None:
-    """Free the persisted blocks behind a materialized, no-longer-referenced
-    localCheckpoint DataFrame. Checkpoint blocks do NOT go through the
-    cache manager, so ``df.unpersist()`` is a no-op on them; reach the
-    LogicalRDD's backing RDD instead (ADVICE r02: repeated fallback
-    invocations in one session leaked checkpointed RDDs until shutdown).
-    Best-effort — internal API, guarded.
-
-    LIFETIME RULE (r04, VERDICT r03 #2 — every call site must satisfy
-    BOTH clauses; the r03 grid-parity crash came from violating them):
-
-    1. WITHIN a pipeline: release a checkpoint only after every
-       DataFrame whose plan reads it is either (a) itself eagerly
-       checkpointed, or (b) persisted AND fully materialized by an
-       action, AND no further cache-miss recompute of that reader is
-       required for correctness (a localCheckpoint has no lineage — its
-       blocks are the only copy, so a reader evicted after release dies
-       with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND instead of recomputing).
-       When the reader outlives the operator (e.g. a returned `records`
-       cache), keep the checkpoint handles until final materialization
-       (`rank_caches` in the fallback below, the leaf checkpoint in
-       operators/naive.py) and release them then.
-    2. ACROSS concurrent pipelines in one session: never share a
-       persisted plan you intend to release. Spark's CacheManager
-       aliases sameResult plans to one InMemoryRelation, so an
-       unpersist in one thread can drop blocks a sibling still reads.
-       Every iterative operator therefore embeds a per-invocation
-       literal (naive root pid token, kapra `_run` column) that makes
-       its cached plans unique; checkpointed RDDs are unique per call
-       by construction. tests/test_concurrency.py stress-tests both
-       clauses."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
-
-
 def _pl_col(compute_pl: bool) -> list:
     """The record's PL: ``pl_vec`` holds one loss per level from 3 up, and
     the record's pattern is its own word at ``level``."""
@@ -203,15 +173,62 @@ def _pl_col(compute_pl: bool) -> list:
     return [F.element_at("pl_vec", F.col("level") - 2).alias("pl")]
 
 
-class _Combo:
-    __slots__ = ("vec", "count", "min_idx", "lo", "hi", "chain")
+def _collect_at_most(df: DataFrame, n: int) -> list | None:
+    """``df``'s rows, counted as they reach the driver; None as soon as
+    more than ``n`` arrive (later partitions are never fetched)."""
+    # closing drops the socket reader, whose finalizer tells the JVM to
+    # stop serving partitions
+    with contextlib.closing(df.toLocalIterator()) as it:
+        rows = list(itertools.islice(it, n + 1))
+    return rows if len(rows) <= n else None
 
-    def __init__(self, vec, count, min_idx, lo, hi):
+
+def _finalize(
+    groups: list[dict], pg_pl: list | None, t: int, map_rows_of
+) -> tuple[list[dict], list[tuple], float, float]:
+    """GroupID = position + 1 over the merged k-groups. Returns the output
+    groups, the map rows (``map_rows_of(pgi, group_id, p_order, lower,
+    upper, vl)`` yields those of p-group ``pgi``), avg_vl, and avg_pl from
+    the p-groups' PL sums ``pg_pl`` over the records kept (NaN if None)."""
+    out_groups: list[dict] = []
+    map_rows: list[tuple] = []
+    for gid0, kg in enumerate(groups):
+        vl = math.sqrt(float(np.sum((kg["hi"] - kg["lo"]) ** 2)) / t)
+        out_groups.append(
+            {"sax": kg["sax"], "level": kg["level"], "count": kg["count"],
+             "lower": kg["lo"], "upper": kg["hi"], "vl": vl}
+        )
+        lo_l = [float(x) for x in kg["lo"]]
+        hi_l = [float(x) for x in kg["hi"]]
+        for p_order, pgi in enumerate(kg["pgs"]):
+            map_rows.extend(map_rows_of(pgi, gid0 + 1, p_order, lo_l, hi_l, vl))
+    avg_vl = float(np.mean([g["vl"] for g in out_groups]))
+    n_kept = sum(g["count"] for g in out_groups)
+    avg_pl = float("nan") if pg_pl is None else math.fsum(pg_pl) / n_kept
+    return out_groups, map_rows, avg_vl, avg_pl
+
+
+def _map_back(base: DataFrame, rec_map: DataFrame, compute_pl: bool):
+    """Join the per-combo assignment back onto the records; the result is
+    persisted and materialized, so the caller may release what it read."""
+    records = base.join(rec_map, "combo_key").select(
+        "original_index", "group_id", "pattern", "level", "values",
+        "lower", "upper", "vl", "p_order", "c_order", *_pl_col(compute_pl),
+    ).persist()
+    records.count()
+    return records
+
+
+class _Combo:
+    __slots__ = ("vec", "count", "min_idx", "lo", "hi", "pl", "chain")
+
+    def __init__(self, vec, count, min_idx, lo, hi, pl):
         self.vec = vec
         self.count = count
         self.min_idx = min_idx
         self.lo = lo
         self.hi = hi
+        self.pl = pl  # PL sum of the combo's records per level from 3 up
         # per-pass bad-group rank chain: the bad_records list is rebuilt
         # each pass (most recent group rank dominates), so a record's
         # position at formation is (reversed(chain), idx) lexicographically
@@ -255,40 +272,41 @@ def kapra_anonymize(
         sax_pl_udf(levels, n_segments, compute_pl)(F.col(values_col))
         .alias("_s"),
     ).select("original_index", "values", "_run", "_s.sax_vec", "_s.pl_vec")
+    # persisted, not counted: the combo aggregation below is its only
+    # reader until the map-back, so its scan fills the cache with no
+    # second branch racing it for the same partitions
     base = base.withColumn(
         "combo_key", F.concat_ws("\x1f", F.col("sax_vec"))
     ).persist()
-    # materialize the cache BEFORE the combo join below: its two branches
-    # would otherwise race to compute the same uncached partitions (block-
-    # lock contention + a duplicate SAX-UDF worker wave — measured 27x
-    # slower at local[32] on 120k series)
-    base.count()
 
-    # ---- lossless reduction to pattern space (one combined shuffle)
+    # ---- lossless reduction to pattern space: ONE combined shuffle for
+    # the count, envelope, first record and per-level PL sums of a combo
+    if compute_pl:
+        pl_sums = F.array(*[
+            F.sum(F.element_at("pl_vec", i + 1)) for i in range(len(levels))
+        ])
+    else:
+        pl_sums = F.lit(None).cast("array<double>")
     combo_df = envelope_agg(
-        base, ["combo_key", "sax_vec"], "values", t, with_vl=False
-    ).join(
-        base.groupBy("combo_key").agg(F.min("original_index").alias("min_idx")),
-        "combo_key",
+        base, ["combo_key", "sax_vec"], "values", t,
+        F.min("original_index").alias("min_idx"), pl_sums.alias("pl_sums"),
     )
-    # driver-safety switch: the collect below is exact and tiny for real
+    # driver-safety switch: the combo collect is exact and tiny for real
     # SAX pattern spaces (C bounded by the joint breakpoint-cell count).
     # If a caller feeds data whose pattern space approaches the row count
-    # (near-unique PAA cells), fall back to the fully distributed
-    # phases-1+2 path — same semantics, no combo collect (VERDICT r01 #4)
-    combo_df = combo_df.persist()
-    n_combos = combo_df.count()
-    if n_combos > max_driver_combos:
+    # (near-unique PAA cells), the collect stops past max_driver_combos
+    # rows and the fully distributed phases-1+2 path runs instead — same
+    # semantics, no combo table on the driver (VERDICT r01 #4)
+    combo_rows = _collect_at_most(combo_df, max_driver_combos)
+    if combo_rows is None:
         return _kapra_distributed(
             spark, base, combo_df, K=K, P=P, sax_level=sax_level, t=t,
             compute_pl=compute_pl,
         )
-    combo_rows = combo_df.collect()
-    combo_df.unpersist()
     combos = [
         _Combo(list(r["sax_vec"]), int(r["count"]), int(r["min_idx"]),
                np.asarray(r["lower"], dtype=np.float64),
-               np.asarray(r["upper"], dtype=np.float64))
+               np.asarray(r["upper"], dtype=np.float64), r["pl_sums"])
         for r in combo_rows
     ]
     # reference record order is original_index asc; combos inherit the
@@ -335,9 +353,13 @@ def kapra_anonymize(
         raise ValueError("no records survived P-grouping")
 
     # attach envelopes to p-groups (exact: elementwise min/max of combos)
+    # and PL sums: a record's PL is at its level, level 3 for the '*' group
     for g in p_groups:
         g["lo"] = np.minimum.reduce([c.lo for c in g["members"]])
         g["hi"] = np.maximum.reduce([c.hi for c in g["members"]])
+        if compute_pl:
+            li = max(g["level"], 3) - 3
+            g["pl"] = math.fsum(c.pl[li] for c in g["members"])
 
     # ---- Phase 3: reference-exact greedy merge (driver, vectorized
     # argmin) over p-group summaries — shared helper, semantics identical
@@ -354,69 +376,41 @@ def kapra_anonymize(
     )
 
     # ---- finalize: GroupID = position+1; broadcast assignment map back
-    out_groups: list[dict] = []
-    mapping_rows: list[tuple] = []
-    for gid0, kg in enumerate(groups):
-        diff = kg["hi"] - kg["lo"]
-        vl = math.sqrt(float(np.sum(diff**2)) / t)
-        out_groups.append(
-            {"sax": kg["sax"], "level": kg["level"], "count": kg["count"],
-             "lower": kg["lo"], "upper": kg["hi"], "vl": vl}
-        )
-        lo_l = [float(x) for x in kg["lo"]]
-        hi_l = [float(x) for x in kg["hi"]]
-        for p_order, pgi in enumerate(kg["pgs"]):
-            pg = p_groups[pgi]
-            # within-p-group record order = (chain, original_index); equal
-            # chains interleave by index, so c_order is the DENSE rank of
-            # the chain among this p-group's combos
-            # the bad list is rebuilt every pass, so the most recent pass's
-            # group rank dominates: compare chains REVERSED
-            chain_rank = {
-                ch: i
-                for i, ch in enumerate(
-                    sorted({c.chain for c in pg["members"]},
-                           key=lambda ch: ch[::-1])
-                )
-            }
-            # record metadata: the word/level at p-group formation; for the
-            # '*' group, each combo's level-3 word at level 3
-            for c in pg["members"]:
-                c_order = chain_rank[c.chain]
-                if pg["level"] == 0:
-                    r_sax, r_level = c.vec[0], 3
-                else:
-                    r_sax, r_level = pg["sax"], pg["level"]
-                mapping_rows.append(
-                    ("\x1f".join(c.vec), gid0 + 1, p_order, c_order,
-                     r_sax, r_level, lo_l, hi_l, vl)
-                )
+    def combo_rows_of(pgi, group_id, p_order, lo_l, hi_l, vl):
+        pg = p_groups[pgi]
+        # within-p-group record order = (chain, original_index); equal
+        # chains interleave by index, so c_order is the DENSE rank of the
+        # chain among this p-group's combos. The bad list is rebuilt every
+        # pass, so the most recent pass's group rank dominates: compare
+        # chains REVERSED
+        chain_rank = {
+            ch: i
+            for i, ch in enumerate(
+                sorted({c.chain for c in pg["members"]}, key=lambda ch: ch[::-1])
+            )
+        }
+        # record metadata: the word/level at p-group formation; for the
+        # '*' group, each combo's level-3 word at level 3
+        for c in pg["members"]:
+            if pg["level"] == 0:
+                r_sax, r_level = c.vec[0], 3
+            else:
+                r_sax, r_level = pg["sax"], pg["level"]
+            yield ("\x1f".join(c.vec), group_id, p_order, chain_rank[c.chain],
+                   r_sax, r_level, lo_l, hi_l, vl)
 
+    out_groups, mapping_rows, avg_vl, avg_pl = _finalize(
+        groups, [g["pl"] for g in p_groups] if compute_pl else None, t,
+        combo_rows_of,
+    )
     mapping = spark.createDataFrame(
         mapping_rows,
         "combo_key string, group_id int, p_order int, c_order int, "
         "pattern string, level int, lower array<double>, "
         "upper array<double>, vl double",
     )
-
-    records = base.join(F.broadcast(mapping), "combo_key").select(
-        "original_index", "group_id", "pattern", "level", "values",
-        "lower", "upper", "vl", "p_order", "c_order", *_pl_col(compute_pl),
-    )
-    # persist: the broadcast join runs ONCE — the avg_pl aggregate below
-    # and every caller action (count/collect/write) hit the cache
-    records = records.persist()
-
-    avg_vl = float(np.mean([g["vl"] for g in out_groups])) if out_groups else 0.0
-    if compute_pl:
-        row = records.agg(
-            F.sum("pl").alias("s"), F.count(F.lit(1)).alias("c")
-        ).first()
-        avg_pl = (row["s"] or 0.0) / row["c"] if row["c"] else 0.0
-    else:
-        avg_pl = float("nan")
+    records = _map_back(base, F.broadcast(mapping), compute_pl)
     base.unpersist()
-
     return KapraGroups(records, out_groups, avg_vl, avg_pl, n_suppressed)
 
 
@@ -450,7 +444,8 @@ def _kapra_distributed(
     iterative plan and yields the loop-control count. The final phase-3
     merge runs on G p-group summaries (the reference algorithm itself is
     O(G^2) there, so a G cap is inherent to the semantics, not to this
-    engine; ``max_driver_groups`` makes it explicit).
+    engine; ``max_driver_groups`` makes it explicit). Each p-group's PL
+    sum rides along in its summary, so avg_pl needs no pass over records.
     """
     levels = list(range(sax_level, 2, -1))
     # order-preserving 20-digit encoding of int64 min_idx (offset to
@@ -464,7 +459,7 @@ def _kapra_distributed(
     )
     bad = (
         combo_df.select(
-            "combo_key", "sax_vec", "count", "lower", "upper",
+            "combo_key", "sax_vec", "count", "lower", "upper", "pl_sums",
             F.lit("").alias("ordk"), idx_ord.alias("idx_ord"),
         )
         .localCheckpoint(eager=True)
@@ -504,6 +499,7 @@ def _kapra_distributed(
         rank_caches.append(pranked._rank_cache)
         exited = b2.join(good, "w").select(
             "combo_key", "count", "lower", "upper", "ordk",
+            F.element_at("pl_sums", level - 2).alias("pl"),
             F.lit(pass_idx).alias("pass"), "p_rank",
             F.col("w").alias("g_sax"), F.lit(level).alias("g_level"),
             F.col("w").alias("r_sax"), F.lit(level).alias("r_level"),
@@ -512,7 +508,7 @@ def _kapra_distributed(
         bad = (
             b2.join(grp.filter(F.col("total") < P).select("w", "g_rank"), "w")
             .select(
-                "combo_key", "sax_vec", "count", "lower", "upper",
+                "combo_key", "sax_vec", "count", "lower", "upper", "pl_sums",
                 F.concat(
                     F.lpad(F.col("g_rank").cast("string"), 12, "0"),
                     F.col("ordk"),
@@ -533,6 +529,7 @@ def _kapra_distributed(
             assigned_parts.append(
                 bad.select(
                     "combo_key", "count", "lower", "upper", "ordk",
+                    F.element_at("pl_sums", 1).alias("pl"),
                     F.lit(sax_level).alias("pass"), F.lit(0).alias("p_rank"),
                     F.lit("*").alias("g_sax"), F.lit(0).alias("g_level"),
                     F.col("sax_vec").getItem(0).alias("r_sax"),
@@ -550,15 +547,10 @@ def _kapra_distributed(
     assigned = assigned.persist()
 
     # ---- p-group summaries -> driver greedy merge (O(G), not O(C))
-    summ = (
-        merge_envelope_agg(assigned, ["pass", "p_rank"], t)
-        .join(
-            assigned.groupBy("pass", "p_rank").agg(
-                F.first("g_sax").alias("g_sax"),
-                F.first("g_level").alias("g_level"),
-            ),
-            ["pass", "p_rank"],
-        )
+    summ = merge_envelope_agg(
+        assigned, ["pass", "p_rank"], t,
+        F.first("g_sax").alias("g_sax"), F.first("g_level").alias("g_level"),
+        F.sum("pl").alias("pl"),
     )
     n_groups_total = summ.count()
     # assigned is materialized — the p_rank range-partition caches are done
@@ -579,7 +571,6 @@ def _kapra_distributed(
         if residue_pin is not None:
             _release_local_checkpoint(residue_pin)
         assigned.unpersist()
-        combo_df.unpersist()
         base.unpersist()
         raise ValueError(
             f"{n_groups_total} p-groups exceed max_driver_groups="
@@ -596,23 +587,15 @@ def _kapra_distributed(
         K, t,
     )
 
-    out_groups: list[dict] = []
-    map_rows: list[tuple] = []
-    for gid0, kg in enumerate(groups):
-        diff = kg["hi"] - kg["lo"]
-        vl = math.sqrt(float(np.sum(diff**2)) / t)
-        out_groups.append(
-            {"sax": kg["sax"], "level": kg["level"], "count": kg["count"],
-             "lower": kg["lo"], "upper": kg["hi"], "vl": vl}
-        )
-        lo_l = [float(x) for x in kg["lo"]]
-        hi_l = [float(x) for x in kg["hi"]]
-        for p_order, pgi in enumerate(kg["pgs"]):
-            r = rows[pgi]
-            map_rows.append(
-                (int(r["pass"]), int(r["p_rank"]), gid0 + 1, p_order,
-                 lo_l, hi_l, vl)
-            )
+    def pgroup_row_of(pgi, group_id, p_order, lo_l, hi_l, vl):
+        r = rows[pgi]
+        yield (int(r["pass"]), int(r["p_rank"]), group_id, p_order,
+               lo_l, hi_l, vl)
+
+    out_groups, map_rows, avg_vl, avg_pl = _finalize(
+        groups, [r["pl"] for r in rows] if compute_pl else None, t,
+        pgroup_row_of,
+    )
     map_df = spark.createDataFrame(
         map_rows,
         "pass int, p_rank int, group_id int, p_order int, "
@@ -637,20 +620,7 @@ def _kapra_distributed(
         )
     )
     # shuffle join on combo_key: both sides are C-sized — never broadcast
-    records = base.join(rec_map, "combo_key").select(
-        "original_index", "group_id", "pattern", "level", "values",
-        "lower", "upper", "vl", "p_order", "c_order", *_pl_col(compute_pl),
-    ).persist()
-
-    avg_vl = float(np.mean([g["vl"] for g in out_groups])) if out_groups else 0.0
-    if compute_pl:
-        row = records.agg(
-            F.sum("pl").alias("s"), F.count(F.lit(1)).alias("c")
-        ).first()
-        avg_pl = (row["s"] or 0.0) / row["c"] if row["c"] else 0.0
-    else:
-        avg_pl = float("nan")
+    records = _map_back(base, rec_map, compute_pl)
     assigned.unpersist()
-    combo_df.unpersist()
     base.unpersist()
     return KapraGroups(records, out_groups, avg_vl, avg_pl, n_suppressed)

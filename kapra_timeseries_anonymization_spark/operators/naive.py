@@ -67,8 +67,7 @@ from ..functions.kernels import (
     sax_all_levels_block,
 )
 from ..functions.sax_udfs import arrow_block, list_array
-from ..plans.lifetime import register_checkpoint
-from .kapra import _release_local_checkpoint
+from ..plans.lifetime import _release_local_checkpoint, register_checkpoint
 
 #: per-invocation plan-uniquing token (see the root-pid comment in
 #: _mondrian_rounds). A process-local counter is enough: aliasing only
@@ -656,7 +655,7 @@ def naive_anonymize(
     ).persist()
     records.count()
     # records is materialized: release the leaf checkpoint it read (the
-    # lifetime rule at _release_local_checkpoint in operators/kapra.py;
+    # lifetime rule at _release_local_checkpoint in plans/lifetime.py;
     # the fault-tolerance note above says what this gives up)
     _release_local_checkpoint(leaves)
     c = tot["c"] or 1.0  # no records: both averages are 0

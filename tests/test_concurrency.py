@@ -8,7 +8,7 @@ dropped blocks a sibling's live lineage still read. The fix is
 per-invocation plan uniquing (naive root-pid token, kapra `_run`
 column) plus threading checkpoint lifetimes out to final
 materialization — see _release_local_checkpoint's LIFETIME RULE in
-operators/kapra.py. Each test here runs a pipeline under a thread pool
+plans/lifetime.py. Each test here runs a pipeline under a thread pool
 with deliberately alias-prone configs (shared K / shared sax_level over
 the SAME cached input) and repeats, asserting both survival and value
 parity with the sequential oracle.

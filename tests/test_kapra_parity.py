@@ -4,7 +4,9 @@ numpy oracle — group assignments exact, envelopes exact, loss metrics to
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
+from kapra_timeseries_anonymization_spark.operators import kapra
 from kapra_timeseries_anonymization_spark.operators.kapra import kapra_anonymize
 from tests.oracle.legacy_dataset import generate_legacy_dataset, series_matrix
 from tests.oracle.reference_impl import kapra_pipeline
@@ -203,3 +205,74 @@ def test_kapra_distributed_fallback_releases_checkpoints(spark):
     # per-invocation growth = exited checkpoints (<= 6 passes + residue)
     # + a stray cache or two — NOT the ~3-per-pass unreleased set
     assert c2 - c1 <= 9, f"fallback leaked {c2 - c1} persistent RDDs"
+
+
+def test_kapra_job_count(spark):
+    """Spark jobs per kapra_anonymize call on the 600-series fixture, read
+    with the job group's tracker: 7 (the combo aggregation's cache, shuffle
+    and result stages, then the broadcast map-back and the records cache);
+    the bound leaves one job of headroom for AQE."""
+    series = series_matrix(generate_legacy_dataset(600, seed=42))
+    df = _to_spark(spark, series.astype(np.float64))
+    sc = spark.sparkContext
+    sc.setJobGroup("kapra-jobs", "kapra-jobs")
+    try:
+        got = kapra_anonymize(df, K=8, P=2, sax_level=8, t=8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("kapra-jobs"))
+    got.records.unpersist()
+    assert n_jobs <= 8, n_jobs
+
+
+def _suppressing_series():
+    """30 noisy rising ramps and one falling ramp: the falling ramp shares
+    no word with the others at any level, so it is the residue below P
+    and is suppressed."""
+    rng = np.random.default_rng(11)
+    ramps = np.arange(8.0) * 10 + rng.normal(0, 0.5, size=(30, 8))
+    return np.vstack([ramps, np.arange(8.0)[::-1] * 10])
+
+
+@pytest.mark.parametrize("max_driver_combos", [5_000_000, 1])
+@pytest.mark.parametrize("case", ["star", "suppressed"])
+def test_kapra_avg_pl_fold(spark, monkeypatch, case, max_driver_combos):
+    """avg_pl is folded on the driver from per-combo PL sums (the '*'
+    group reads level 3, suppressed combos add nothing); it must equal a
+    Spark-side sum(pl)/count over the returned records, on the driver
+    path and through the forced fallback."""
+    if case == "star":
+        series = series_matrix(generate_legacy_dataset(3000, seed=42))
+    else:
+        series = _suppressing_series()
+    saxes = []
+    merge = kapra._greedy_min_vl_merge
+    monkeypatch.setattr(
+        kapra, "_greedy_min_vl_merge",
+        lambda s, *a: saxes.extend(s) or merge(s, *a),
+    )
+    got = kapra_anonymize(
+        _to_spark(spark, series.astype(np.float64)), K=8, P=2, sax_level=8,
+        t=8, max_driver_combos=max_driver_combos,
+    )
+    if case == "star":
+        assert "*" in saxes
+    else:
+        assert got.n_suppressed == 1 and "*" not in saxes
+    s, c = got.records.agg(F.sum("pl"), F.count(F.lit(1))).first()
+    assert c == len(series) - got.n_suppressed
+    assert abs(got.avg_pl - s / c) < 1e-12
+    got.records.unpersist()
+
+
+@pytest.mark.parametrize("max_driver_combos", [5_000_000, 1])
+def test_kapra_without_pl_avg_is_nan(spark, max_driver_combos):
+    """compute_pl=False on both paths: no pl column and a NaN avg_pl."""
+    series = series_matrix(generate_legacy_dataset(300, seed=9))
+    got = kapra_anonymize(
+        _to_spark(spark, series.astype(np.float64)), K=8, P=2, sax_level=8,
+        t=8, compute_pl=False, max_driver_combos=max_driver_combos,
+    )
+    assert "pl" not in got.records.columns and np.isnan(got.avg_pl)
+    got.records.unpersist()

@@ -8,7 +8,7 @@ the single-JVM answer. This is the only test that exercises for real:
 - ``ship_package``'s addPyFile path feeding executor Python workers that
   do NOT share the driver process (the --py-files deployment shape);
 - ``localCheckpoint`` blocks living in executor block managers (the
-  checkpoint LIFETIME RULE's stated failure domain, operators/kapra.py);
+  checkpoint LIFETIME RULE's stated failure domain, plans/lifetime.py);
 - broadcast map-backs crossing process boundaries.
 
 Runs in a subprocess: a Python process owns at most one SparkContext and
