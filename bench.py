@@ -37,7 +37,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from kapra_timeseries_anonymization_spark.plans.lifetime import release_all
+from kapra_timeseries_anonymization_spark.plans import lifetime
 from kapra_timeseries_anonymization_spark.queries import REGISTRY
 from kapra_timeseries_anonymization_spark.session import build_session
 
@@ -68,17 +68,14 @@ def run_once(spark, sf_dir: str, names) -> dict[str, float]:
     times: dict[str, float] = {}
     for name in names:
         fn, _ = REGISTRY[name]
-        t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        n = df.count()
-        times[name] = round(time.perf_counter() - t0, 3)
-        times[f"_rows_{name}"] = n
-        # release pipeline-internal caches/checkpoints via the session
-        # lifetime registry (r05, VERDICT r04 #3: replaces the
-        # _result_cache/_rank_cache/_result_ckpt attribute convention) —
-        # without this, 4 runs of each anonymization query pin 4 O(N)
+        # the scope releases what the query registered once it is counted;
+        # without it, 4 runs of each anonymization query pin 4 O(N)
         # records caches for the session (memory-pressure jitter)
-        release_all()
+        with lifetime.scope():
+            t0 = time.perf_counter()
+            n = fn(spark, sf_dir).count()
+            times[name] = round(time.perf_counter() - t0, 3)
+        times[f"_rows_{name}"] = n
     return times
 
 

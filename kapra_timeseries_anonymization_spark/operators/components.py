@@ -105,11 +105,9 @@ def connected_components(
         raise RuntimeError(f"no convergence in {max_iter} star rounds")
     # stars: children u -> root v, plus the roots themselves. The final
     # round's checkpoint backs the result and must outlive it; it is
-    # registered with the session lifetime registry (r05, ADVICE r04:
-    # the old `_result_ckpt` attribute vanished across any caller
-    # transformation and pinned blocks for callers that didn't know the
-    # convention) — the harness frees it via plans.lifetime.release_all()
-    # AFTER materializing the result; re-collecting after that raises
+    # registered with plans/lifetime.py, and the caller's
+    # lifetime.scope() frees it on exit, so the result must be
+    # materialized inside the scope: re-collecting after that raises
     # rather than recomputing (a localCheckpoint has no lineage).
     register_checkpoint(e)
     return e.select(

@@ -48,7 +48,7 @@ def pack_offsets(
     # round up across an integer boundary once offsets pass ~2^52 stream
     # units, silently diverging from the oracle's exact `//` (ADVICE r03)
     cap = int(capacity)
-    out = t.select(
+    return t.select(
         key_col,
         F.col("_sz").alias("size"),
         start.alias("start_off"),
@@ -56,5 +56,3 @@ def pack_offsets(
         F.expr(f"(_end - _sz) DIV {cap}").alias("first_bin"),
         F.expr(f"(_end - 1) DIV {cap}").alias("last_bin"),
     )
-    out._rank_cache = t._rank_cache
-    return out

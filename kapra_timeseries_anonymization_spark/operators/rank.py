@@ -1,40 +1,40 @@
-"""Distributed global rank: row_number over a global ORDER BY without the
-single-task window.
+"""Distributed global rank and running total without the single-task
+window.
 
 ``Window.orderBy(col)`` with no partitionBy collapses the whole input into
 ONE task — fine for a few thousand rows, a linear-in-N bottleneck for the
-distributed-KAPRA per-pass group ranks (VERDICT r02 "What's wrong" #3) and
-the corpus-shuffle/packing queries. This helper computes the identical
-rank in three bounded steps:
+distributed-KAPRA per-pass group ranks and the corpus-shuffle/packing
+queries. :func:`distributed_running_total` computes the identical
+inclusive running sum in three bounded steps, and
+:func:`distributed_rank` is its value-1 case (the running count is the
+row_number):
 
 1. ``repartitionByRange(n, col)`` — Spark's RangePartitioner contract puts
    ascending key ranges in ascending partition ids, so global order ==
    (partition id, within-partition order).
-2. per-partition ``row_number`` — N/n rows per task, fully parallel.
-3. partition counts -> cumulative offsets (a window over <= n rows, the
-   session's parallelism, never the data size) broadcast back.
+2. per-partition running sum — N/n rows per task, fully parallel.
+3. partition subtotals -> cumulative offsets (a window over <= n rows,
+   the session's parallelism, never the data size) broadcast back.
 
 Requires the order key to be UNIQUE (all call sites rank distinct keys);
 with duplicates the boundary rows of equal keys could straddle two range
-partitions and the local row_number would not reproduce the global one.
+partitions and the local running sum would not reproduce the global one.
 
 Two partitioning strategies:
 
 - default: ``repartitionByRange`` (sampled boundaries). Because the
-  counts branch and the rank branch must see ONE boundary assignment,
-  the ranged intermediate is persisted and the cache handed back via
-  ``_rank_cache`` for the caller to release once its downstream result
-  is materialized.
+  subtotals branch and the running-sum branch must see ONE boundary
+  assignment, the ranged intermediate is persisted and registered with
+  plans/lifetime.py: the caller's ``lifetime.scope()`` releases it once
+  the downstream result is materialized.
 - ``hex_key=True`` (keys are fixed-length lowercase-hex strings, e.g.
-  md5): the partition id is computed FROM the key — the first 4 hex
+  md5): the partition id is computed FROM the key — the first 8 hex
   chars scaled into [0, n). That mapping is a pure, monotone function
   of the key (hex-string lexicographic order == numeric order), so
   global order == (_part, key) with NO boundary sampling, which makes
-  the two branches consistent by construction: no persist, no
-  ``_rank_cache`` (it is set to None), nothing for the caller to
-  release, and the result is retry/AQE-stable on a real cluster. This
-  is the 100 TB path for the corpus-shuffle/packing queries (ADVICE
-  r03: their un-released rank caches pinned O(N) rows per session);
+  the two branches consistent by construction: no persist, nothing
+  registered, and the result is retry/AQE-stable on a real cluster.
+  This is the 100 TB path for the corpus-shuffle/packing queries;
   balance inherits the key distribution — uniform for md5.
 """
 
@@ -96,48 +96,15 @@ def distributed_rank(
     """Add ``rank_col`` = global ascending row_number of ``order_col``
     (values must be unique), starting at ``start``. Equivalent to
     ``F.row_number().over(Window.orderBy(order_col)) + (start-1)`` but
-    scales past one task. With the default strategy the caller must
-    unpersist ``result._rank_cache`` after materializing downstream;
-    with ``hex_key=True`` (see module docstring) there is no cache and
-    ``result._rank_cache`` is None."""
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
-    if hex_key:
-        ranged = df.withColumn("_part", _hex_part(order_col, num_partitions))
-        cache = None
-    else:
-        ranged = (
-            df.repartitionByRange(num_partitions, F.col(order_col))
-            .withColumn("_part", F.spark_partition_id())
-            .persist()
-        )
-        cache = ranged
-    counts = ranged.groupBy("_part").agg(F.count(F.lit(1)).alias("_c"))
-    # <= num_partitions rows: the one remaining global window is bounded
-    # by the session's parallelism, not by the data (the "WindowExec: No
-    # Partition Defined" WARN it logs is therefore benign — see PLANS.md)
-    offsets = counts.select(
-        "_part",
-        (F.sum("_c").over(Window.orderBy("_part")) - F.col("_c")).alias("_off"),
+    scales past one task: the value-1 case of
+    :func:`distributed_running_total`."""
+    out = distributed_running_total(
+        df.withColumn("_one", F.lit(1)), order_col, "_one", rank_col,
+        num_partitions=num_partitions, hex_key=hex_key,
     )
-    local = F.row_number().over(Window.partitionBy("_part").orderBy(order_col))
-    out = (
-        ranged.join(F.broadcast(offsets), "_part")
-        .withColumn(
-            rank_col,
-            (local + F.col("_off") + F.lit(start - 1)).cast(cast),
-        )
-        .drop("_part", "_off")
-    )
-    # lifetime (r05): the cache is ALSO registered with the session
-    # registry, so a caller that never touches `_rank_cache` still gets
-    # it freed at the harness's release_all(); pipeline-internal callers
-    # keep releasing early via the attribute (double release is a no-op)
-    if cache is not None:
-        register_cache(cache)
-    out._rank_cache = cache
-    return out
+    return out.withColumn(
+        rank_col, (F.col(rank_col) + F.lit(start - 1)).cast(cast)
+    ).drop("_one")
 
 
 def distributed_running_total(
@@ -149,29 +116,29 @@ def distributed_running_total(
     hex_key: bool = False,
 ) -> DataFrame:
     """Add ``total_col`` = inclusive running sum of ``value_col`` in global
-    ``order_col`` order (keys must be unique) — the prefix-sum
-    generalization of :func:`distributed_rank` (which is the value==1
-    case), with the same three bounded steps: range partition, local
-    window, broadcast per-partition offsets (the one global window runs
-    over <= num_partitions subtotal rows). Caller must unpersist
-    ``result._rank_cache`` after materializing downstream (None — nothing
-    to release — under ``hex_key=True``, see module docstring)."""
+    ``order_col`` order (keys must be unique), in three bounded steps:
+    range partition, local window, broadcast per-partition offsets (the
+    one global window runs over <= num_partitions subtotal rows). The
+    sampled strategy's persisted intermediate is registered with
+    plans/lifetime.py (nothing is, under ``hex_key=True``; see the module
+    docstring)."""
     spark = df.sparkSession
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
     if hex_key:
         ranged = df.withColumn("_part", _hex_part(order_col, num_partitions))
-        cache = None
     else:
-        ranged = (
+        ranged = register_cache(
             df.repartitionByRange(num_partitions, F.col(order_col))
             .withColumn("_part", F.spark_partition_id())
             .persist()
         )
-        cache = ranged
     subtotals = ranged.groupBy("_part").agg(
         F.sum(value_col).cast("long").alias("_c")
     )
+    # <= num_partitions rows: the one remaining global window is bounded
+    # by the session's parallelism, not by the data (the "WindowExec: No
+    # Partition Defined" WARN it logs is therefore benign — see PLANS.md)
     offsets = subtotals.select(
         "_part",
         (F.sum("_c").over(Window.orderBy("_part")) - F.col("_c")).alias("_off"),
@@ -181,12 +148,8 @@ def distributed_running_total(
         .orderBy(order_col)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    out = (
+    return (
         ranged.join(F.broadcast(offsets), "_part")
         .withColumn(total_col, (local + F.col("_off")).cast("long"))
         .drop("_part", "_off")
     )
-    if cache is not None:
-        register_cache(cache)
-    out._rank_cache = cache
-    return out

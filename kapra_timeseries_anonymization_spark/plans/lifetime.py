@@ -1,55 +1,60 @@
-"""Session-level lifetime registry for pipeline-internal caches/checkpoints.
+"""Scoped lifetime registry for pipeline-internal caches/checkpoints.
 
-r05 (VERDICT r04 "What's wrong" #3, ADVICE r04): the previous
-``_result_cache`` / ``_rank_cache`` / ``_result_ckpt`` convention threaded
-release handles as Python attributes monkey-patched onto DataFrames.
-That convention had two structural failure modes:
+Operators and queries REGISTER every cache (:func:`register_cache`) or
+eager localCheckpoint (:func:`register_checkpoint`) that must outlive
+the point where it is made; the handle is released when the innermost
+enclosing ``with scope():`` block exits. This is the only lifetime
+mechanism in the package: no release handle rides on a DataFrame
+attribute (an attribute vanishes across any further transformation, so
+a wrapper silently restores the leak), and no harness has to know which
+operator made what.
 
-1. attributes vanish across ANY further DataFrame transformation, so a
-   wrapper silently restores the leak the convention exists to prevent;
-2. only harnesses that know the convention release anything — three
-   rounds in a row the bug class was cache lifetime.
+Scopes nest on a thread-local stack. A harness wraps each query in a
+scope (bench.py, tools/check_queries.py) and ``run_grid`` wraps each
+config; a pipeline opens its own scopes around intermediates it can
+free before returning (operators/kapra.py's distributed fallback frees
+each pass's rank cache once the pass's groups are checkpointed, the
+per-pass checkpoints once ``assigned`` is counted, and the rest once
+``records`` is materialized). Registrations made outside any scope stay
+pending for the life of the thread.
 
-This registry is the structural fix. Operators and queries REGISTER
-every cache (:func:`register_cache`) or eager localCheckpoint
-(:func:`register_checkpoint`) that must outlive the lazy result they
-return; harnesses call ONE :func:`release_all` after materializing.
-Releasing twice is a harmless no-op (``unpersist`` and the checkpoint
-block release are both idempotent), so operators that also release a
-handle early at a pipeline-internal safe point stay correct.
-
-Thread scoping: registration lands in the REGISTERING thread's bucket
-and ``release_all()`` frees only the calling thread's bucket. Concurrent
-pipelines (grid sweeps over a thread pool, tests/test_concurrency.py)
-therefore can never release each other's live handles — each worker
-thread builds, materializes, and releases its own. (Cross-thread
-CacheManager aliasing of sameResult plans is separately defused by the
-per-invocation plan-uniquing literals documented at
-:func:`_release_local_checkpoint`'s LIFETIME RULE below; this
-registry only controls WHEN a handle the owning thread created is
-freed.)
+Thread scoping: a registration lands in the REGISTERING thread's
+innermost scope, and a scope releases only what was registered in it.
+Concurrent pipelines (grid sweeps over a thread pool,
+tests/test_concurrency.py) therefore never release each other's live
+handles. (Cross-thread CacheManager aliasing of sameResult plans is
+separately defused by the per-invocation plan-uniquing literals
+documented at :func:`_release_local_checkpoint`'s LIFETIME RULE below;
+this registry only controls WHEN a handle the owning thread created is
+freed.) Releasing twice is a harmless no-op (``unpersist`` and the
+checkpoint block release are both idempotent).
 
 WARNING — no recompute after release: a localCheckpoint has no lineage,
 so once released, any un-materialized reader of its blocks fails with
-CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND instead of recomputing. Call
-``release_all()`` only after every DataFrame returned since the last
-call is fully materialized (collected / counted / written).
+CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND instead of recomputing. Close a scope
+only after every DataFrame built inside it that reads a registered
+handle is fully materialized (collected / counted / written) or no
+longer needed.
 """
 
 from __future__ import annotations
 
+import contextlib
 import threading
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 
 _LOCAL = threading.local()
 
 
-def _bucket() -> list[tuple[str, DataFrame]]:
-    b = getattr(_LOCAL, "handles", None)
-    if b is None:
-        b = _LOCAL.handles = []
-    return b
+def _stack() -> list[list[tuple[str, DataFrame]]]:
+    """The calling thread's scopes, innermost last; the first entry holds
+    what was registered outside any scope."""
+    s = getattr(_LOCAL, "stack", None)
+    if s is None:
+        s = _LOCAL.stack = [[]]
+    return s
 
 
 def _release_local_checkpoint(df: DataFrame) -> None:
@@ -70,10 +75,11 @@ def _release_local_checkpoint(df: DataFrame) -> None:
        required for correctness (a localCheckpoint has no lineage — its
        blocks are the only copy, so a reader evicted after release dies
        with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND instead of recomputing).
-       When the reader outlives the operator (e.g. a returned `records`
-       cache), keep the checkpoint handles until final materialization
-       (`rank_caches` in operators/kapra.py's distributed fallback, the
-       leaf checkpoint in operators/naive.py) and release them then.
+       When the reader outlives the operator (a returned ``records``
+       cache), either keep the handle registered for the caller's scope
+       or release it once the returned cache is materialized and say so
+       in the result's fault note (operators/kapra.py's distributed
+       fallback and operators/naive.py both release at return).
     2. ACROSS concurrent pipelines in one session: never share a
        persisted plan you intend to release. Spark's CacheManager
        aliases sameResult plans to one InMemoryRelation, so an
@@ -90,39 +96,40 @@ def _release_local_checkpoint(df: DataFrame) -> None:
 
 
 def register_cache(df: DataFrame) -> DataFrame:
-    """Register a persisted DataFrame for release at the harness's next
-    ``release_all()``. Returns ``df`` for chaining."""
-    _bucket().append(("cache", df))
+    """Register a persisted DataFrame for release when the innermost
+    enclosing :func:`scope` exits. Returns ``df`` for chaining."""
+    _stack()[-1].append(("cache", df))
     return df
 
 
 def register_checkpoint(df: DataFrame) -> DataFrame:
-    """Register an eagerly localCheckpointed DataFrame whose blocks back
-    a returned lazy result. Released (block-level, not CacheManager) at
-    the next ``release_all()``. Returns ``df`` for chaining."""
-    _bucket().append(("ckpt", df))
+    """Register a localCheckpointed DataFrame for release (block-level,
+    not CacheManager) when the innermost enclosing :func:`scope` exits.
+    Returns ``df`` for chaining."""
+    _stack()[-1].append(("ckpt", df))
     return df
 
 
 def pending() -> int:
     """Number of handles the calling thread has registered and not yet
-    released — exposed so tests can assert pipelines register at all."""
-    return len(_bucket())
+    released, in all of its scopes and outside them."""
+    return sum(len(b) for b in _stack())
 
 
-def release_all() -> int:
-    """Release every cache/checkpoint registered by the CALLING thread
-    since its last ``release_all()``; returns how many were released.
-    Safe to call when nothing is registered. Idempotent per handle."""
-    b = _bucket()
-    n = len(b)
-    for kind, df in b:
-        try:
-            if kind == "cache":
-                df.unpersist()
-            else:
-                _release_local_checkpoint(df)
-        except Exception:
-            pass  # best-effort: a stopped session must not mask results
-    b.clear()
-    return n
+@contextlib.contextmanager
+def scope() -> Iterator[None]:
+    """Release every cache/checkpoint the calling thread registers inside
+    the block when the block exits, normally or by an exception."""
+    stack = _stack()
+    stack.append([])
+    try:
+        yield
+    finally:
+        for kind, df in stack.pop():
+            try:
+                if kind == "cache":
+                    df.unpersist()
+                else:
+                    _release_local_checkpoint(df)
+            except Exception:
+                pass  # best-effort: a stopped session must not mask results

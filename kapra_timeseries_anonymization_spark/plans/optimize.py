@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 
 from ..operators.kapra import kapra_anonymize
 from ..operators.naive import naive_anonymize
+from . import lifetime
 
 
 @dataclass
@@ -48,21 +49,23 @@ def run_grid(
 
     def one(cfg: tuple[int, int, int]) -> GridResult:
         k, p, level = cfg
-        t0 = time.perf_counter()
-        if algo == "kapra":
-            res = kapra_anonymize(series, K=k, P=p, sax_level=level, t=t)
-        elif algo == "naive":
-            res = naive_anonymize(series, K=k, P=p, max_level=level, t=t)
-        else:
-            raise ValueError(algo)
-        out = GridResult(
-            k, p, level, round(time.perf_counter() - t0, 3),
-            round(res.avg_vl, 6), round(res.avg_pl, 6),
-        )
-        # losses are extracted — release the per-config records cache, or a
-        # sweep leaves one cached DataFrame per config for the session
-        res.records.unpersist()
-        return out
+        # one scope per config: whatever the config registers is released
+        # in the pool thread that registered it
+        with lifetime.scope():
+            t0 = time.perf_counter()
+            if algo == "kapra":
+                res = kapra_anonymize(series, K=k, P=p, sax_level=level, t=t)
+            elif algo == "naive":
+                res = naive_anonymize(series, K=k, P=p, max_level=level, t=t)
+            else:
+                raise ValueError(algo)
+            # losses are extracted — release the per-config records cache,
+            # or a sweep leaves one cached DataFrame per config
+            lifetime.register_cache(res.records)
+            return GridResult(
+                k, p, level, round(time.perf_counter() - t0, 3),
+                round(res.avg_vl, 6), round(res.avg_pl, 6),
+            )
 
     if parallelism > 1:
         with ThreadPoolExecutor(max_workers=parallelism) as ex:

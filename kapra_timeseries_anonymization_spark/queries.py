@@ -60,19 +60,6 @@ def _ts_str(col) -> F.Column:
     return F.date_format(col, "yyyy-MM-dd HH:mm:ss")
 
 
-def _carry_cache(out: DataFrame, cache: DataFrame) -> DataFrame:
-    """Register an anonymization pipeline's internal ``records`` cache
-    with the session lifetime registry (r05, VERDICT r04 #3: this used to
-    be the ``_result_cache`` attribute convention — attributes vanish
-    across DataFrame wrappers and leak under convention-unaware
-    harnesses). The cache must outlive the returned lazy result — its
-    lineage reads released checkpoints — so the QUERY cannot unpersist
-    it; bench.py and tools/check_queries.py call
-    plans.lifetime.release_all() after materializing."""
-    register_cache(cache)
-    return out
-
-
 # ---------------------------------------------------------------------------
 # Relational core on the TPC-H-ish tables (S1-S4, A4-A6, O1-O7, J-ops)
 # ---------------------------------------------------------------------------
@@ -654,7 +641,8 @@ def kapra_output_table(spark, sf):
     ).withColumn(
         "h1_hi", F.regexp_extract("H1", r"\[(-?\d+)-(-?\d+)\]", 2).cast("double")
     )
-    return _carry_cache(out.orderBy("GroupID", "original_index"), res.records)
+    register_cache(res.records)
+    return out.orderBy("GroupID", "original_index")
 
 
 def _output_structure(
@@ -763,7 +751,8 @@ def kapra_output_structure(spark, sf):
     out = _output_structure(
         series, res.records, res.n_suppressed, K=8, int_intervals=True
     )
-    return _carry_cache(out, res.records)
+    register_cache(res.records)
+    return out
 
 
 @q(
@@ -783,7 +772,8 @@ def naive_output_structure(spark, sf):
     series = user_activity_series(ev)
     res = naive_anonymize(series, K=8, P=2, max_level=10, t=8)
     out = _output_structure(series, res.records, 0, K=8, int_intervals=False)
-    return _carry_cache(out, res.records)
+    register_cache(res.records)
+    return out
 
 
 @q("plot_cluster_envelope", None)
@@ -926,12 +916,10 @@ def kapra_transcripts(spark, sf):
     t = transcripts_from_events(spark, sf)
     series = conv_turn_rate_series(t, n_buckets=8)
     res = kapra_anonymize(series, K=8, P=2, sax_level=8, t=8)
-    return _carry_cache(
-        res.records.select(
-            "original_index", "group_id", "pattern", "level",
-            F.round("pl", 6).alias("pl"), F.round("vl", 6).alias("vl"),
-        ),
-        res.records,
+    register_cache(res.records)
+    return res.records.select(
+        "original_index", "group_id", "pattern", "level",
+        F.round("pl", 6).alias("pl"), F.round("vl", 6).alias("vl"),
     )
 
 
@@ -1292,7 +1280,7 @@ def doc_dup_components(spark, sf):
     pairs = ngram_jaccard_pairs(d, k=3, threshold=0.2)
     comp = connected_components(pairs, "id_a", "id_b")
     # the backing checkpoint is registered with plans.lifetime by the
-    # operator itself; the harness's release_all() frees it (r05)
+    # operator itself; the harness's lifetime.scope() frees it
     return comp.select(F.col("node").alias("doc_id"), "component_id")
 
 
@@ -1627,12 +1615,10 @@ def kapra_user_activity(spark, sf):
     ev = read_table(spark, sf, "events")
     series = user_activity_series(ev)
     res = kapra_anonymize(series, K=8, P=2, sax_level=8, t=8)
-    return _carry_cache(
-        res.records.select(
-            "original_index", "group_id", "pattern", "level",
-            F.round("pl", 6).alias("pl"), F.round("vl", 6).alias("vl"),
-        ),
-        res.records,
+    register_cache(res.records)
+    return res.records.select(
+        "original_index", "group_id", "pattern", "level",
+        F.round("pl", 6).alias("pl"), F.round("vl", 6).alias("vl"),
     )
 
 
@@ -1653,13 +1639,11 @@ def naive_output_table(spark, sf):
         ).alias(f"H{i + 1}")
         for i in range(8)
     ]
-    return _carry_cache(
-        rec.select(
-            F.col("group_id").alias("GroupID"), *iv,
-            F.col("pattern").alias("Pattern"), "original_index",
-        ).orderBy("GroupID", "original_index"),
-        rec,
-    )
+    register_cache(rec)
+    return rec.select(
+        F.col("group_id").alias("GroupID"), *iv,
+        F.col("pattern").alias("Pattern"), "original_index",
+    ).orderBy("GroupID", "original_index")
 
 
 @q("naive_user_activity", None)
@@ -1670,12 +1654,10 @@ def naive_user_activity(spark, sf):
     ev = read_table(spark, sf, "events")
     series = user_activity_series(ev)
     res = naive_anonymize(series, K=8, P=2, max_level=10, t=8)
-    return _carry_cache(
-        res.records.select(
-            "original_index", "group_id", "leaf_seq", "pattern", "level",
-            F.round("vl", 4).alias("vl"),
-        ),
-        res.records,
+    register_cache(res.records)
+    return res.records.select(
+        "original_index", "group_id", "leaf_seq", "pattern", "level",
+        F.round("vl", 4).alias("vl"),
     )
 
 
@@ -1760,9 +1742,8 @@ def naive_range_query_error(spark, sf):
     ev = read_table(spark, sf, "events")
     series = user_activity_series(ev)
     res = naive_anonymize(series, K=5, P=2, max_level=10, t=8)
-    return _carry_cache(
-        range_query_error(res.records, series, t=8, n_queries=50), res.records
-    )
+    register_cache(res.records)
+    return range_query_error(res.records, series, t=8, n_queries=50)
 
 
 @q("kapra_range_query_error", None)
@@ -1776,6 +1757,5 @@ def kapra_range_query_error(spark, sf):
     ev = read_table(spark, sf, "events")
     series = user_activity_series(ev)
     res = kapra_anonymize(series, K=5, P=2, sax_level=8, t=8)
-    return _carry_cache(
-        range_query_error(res.records, series, t=8, n_queries=50), res.records
-    )
+    register_cache(res.records)
+    return range_query_error(res.records, series, t=8, n_queries=50)

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from kapra_timeseries_anonymization_spark.operators import kapra
 from kapra_timeseries_anonymization_spark.operators.kapra import kapra_anonymize
+from kapra_timeseries_anonymization_spark.plans import lifetime
 from tests.oracle.legacy_dataset import generate_legacy_dataset, series_matrix
 from tests.oracle.reference_impl import kapra_pipeline
 
@@ -181,30 +182,29 @@ def test_kapra_distributed_fallback_equals_driver_path(
 
 
 def test_kapra_distributed_fallback_releases_checkpoints(spark):
-    """ADVICE r02: the fallback's per-pass eager grp/bad localCheckpoints
-    must be freed once `assigned` is materialized — only the bounded
-    pinned set (exited lazy checkpoints read by records' lineage, plus
-    the residue checkpoint) may persist per invocation. Before the fix
-    each pass leaked ~3 checkpointed RDDs; with sax_level=8 (6 passes)
-    repeated invocations grew the persistent-RDD set by ~15+ each."""
+    """The fallback releases everything it made once `records` is
+    materialized: the per-pass checkpoints, the rank caches, `assigned`,
+    the lazy checkpoints of its parts and `base`. With the caller's
+    `records.unpersist()`, a call leaves no persistent RDD behind and
+    nothing pending in the caller's lifetime registry."""
     df = generate_legacy_dataset(400, seed=3)
     series = series_matrix(df).astype(np.float64)
     sdf = _to_spark(spark, series)
     sc = spark.sparkContext
 
     def run():
+        p0 = lifetime.pending()
         r = kapra_anonymize(sdf, K=8, P=2, sax_level=8, t=8,
                             max_driver_combos=1)
+        assert lifetime.pending() == p0
         r.records.count()
         r.records.unpersist()
 
-    run()  # warm: first invocation's pinned set stays by design
+    run()
     c1 = sc._jsc.getPersistentRDDs().size()
     run()
     c2 = sc._jsc.getPersistentRDDs().size()
-    # per-invocation growth = exited checkpoints (<= 6 passes + residue)
-    # + a stray cache or two — NOT the ~3-per-pass unreleased set
-    assert c2 - c1 <= 9, f"fallback leaked {c2 - c1} persistent RDDs"
+    assert c2 - c1 == 0, f"fallback leaked {c2 - c1} persistent RDDs"
 
 
 def test_kapra_job_count(spark):
@@ -224,6 +224,26 @@ def test_kapra_job_count(spark):
     n_jobs = len(sc.statusTracker().getJobIdsForGroup("kapra-jobs"))
     got.records.unpersist()
     assert n_jobs <= 8, n_jobs
+
+
+def test_kapra_fallback_job_count(spark):
+    """Spark jobs per forced-fallback call (max_driver_combos=1) on the
+    600-series fixture, read as in test_kapra_job_count: one group rank
+    per recycle pass, no second rank over the good groups. Measured
+    125; the bound leaves two jobs of headroom for AQE."""
+    series = series_matrix(generate_legacy_dataset(600, seed=42))
+    df = _to_spark(spark, series.astype(np.float64))
+    sc = spark.sparkContext
+    sc.setJobGroup("kapra-fallback-jobs", "kapra-fallback-jobs")
+    try:
+        got = kapra_anonymize(df, K=8, P=2, sax_level=8, t=8,
+                              max_driver_combos=1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("kapra-fallback-jobs"))
+    got.records.unpersist()
+    assert n_jobs <= 127, n_jobs
 
 
 def _suppressing_series():

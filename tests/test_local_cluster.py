@@ -95,8 +95,8 @@ spark = build_session("lc-naive-test", master=sys.argv[1])
 # deterministic partition-independent synth (same scheme as
 # tools/scale_run.py); rank_head_rows=1 forces the r05 head-rank path
 # so its range exchange + broadcast offsets cross executor JVMs;
-# local_threshold=64 exercises the in-task local-finish applyInPandas
-# on real (non-driver) python workers.
+# local_threshold=64 exercises the in-task local finish (the fused
+# grouped applyInArrow pass) on real (non-driver) python workers.
 src = spark.range(3000).select(
     F.col("id").alias("original_index"),
     F.array(*[

@@ -1,10 +1,13 @@
-"""distributed_rank == single-task Window.orderBy row_number, exactly."""
+"""distributed_rank == single-task Window.orderBy row_number, exactly;
+the sampled strategy's cache is registered with plans/lifetime.py and the
+hex-key strategy registers nothing."""
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from kapra_timeseries_anonymization_spark.operators.rank import distributed_rank
+from kapra_timeseries_anonymization_spark.plans import lifetime
 
 
 @pytest.mark.parametrize(
@@ -26,26 +29,28 @@ def test_matches_global_window(spark, n, start, num_partitions):
             "rank", F.row_number().over(Window.orderBy("k")) + F.lit(start - 1)
         ).collect()
     }
-    ranked = distributed_rank(
-        df, "k", "rank", start=start, num_partitions=num_partitions
-    )
-    got = {r["k"]: r["rank"] for r in ranked.collect()}
-    ranked._rank_cache.unpersist()
+    p0 = lifetime.pending()
+    with lifetime.scope():
+        ranked = distributed_rank(
+            df, "k", "rank", start=start, num_partitions=num_partitions
+        )
+        got = {r["k"]: r["rank"] for r in ranked.collect()}
+        assert lifetime.pending() == p0 + 1  # the ranged cache
+    assert lifetime.pending() == p0
     assert got == expect
 
 
 def test_empty(spark):
     df = spark.createDataFrame([], "k string")
-    ranked = distributed_rank(df, "k", "rank")
-    assert ranked.count() == 0
-    ranked._rank_cache.unpersist()
+    with lifetime.scope():
+        assert distributed_rank(df, "k", "rank").count() == 0
 
 
 def test_more_partitions_than_rows(spark):
     df = spark.createDataFrame([("b",), ("a",), ("c",)], "k string")
-    ranked = distributed_rank(df, "k", "rank", num_partitions=32)
-    got = dict(ranked.select("k", "rank").collect())
-    ranked._rank_cache.unpersist()
+    with lifetime.scope():
+        ranked = distributed_rank(df, "k", "rank", num_partitions=32)
+        got = dict(ranked.select("k", "rank").collect())
     assert got == {"a": 1, "b": 2, "c": 3}
 
 
@@ -68,9 +73,10 @@ def test_running_total_matches_global_window(spark):
             ),
         ).collect()
     }
-    got_df = distributed_running_total(df, "k", "sz", "tot", num_partitions=16)
-    got = {r["k"]: r["tot"] for r in got_df.collect()}
-    got_df._rank_cache.unpersist()
+    with lifetime.scope():
+        got_df = distributed_running_total(df, "k", "sz", "tot",
+                                           num_partitions=16)
+        got = {r["k"]: r["tot"] for r in got_df.collect()}
     assert got == expect
 
 
@@ -80,9 +86,10 @@ def test_pack_offsets_stream_is_gapless(spark):
     df = spark.createDataFrame(
         [(i, 100 + (i * 37) % 900) for i in range(300)], "doc_id long, n long"
     )
+    p0 = lifetime.pending()
     out = pack_offsets(df, "doc_id", "n", capacity=1024)
     rows = sorted(out.collect(), key=lambda r: r["start_off"])
-    assert out._rank_cache is None  # hex_key path: nothing to release
+    assert lifetime.pending() == p0  # hex_key path: nothing to release
     assert rows[0]["start_off"] == 0
     for a, b in zip(rows, rows[1:]):
         assert a["end_off"] == b["start_off"]  # gapless concat stream
@@ -106,11 +113,12 @@ def test_hex_key_matches_global_window(spark, n, num_partitions):
             "rank", F.row_number().over(Window.orderBy("k"))
         ).collect()
     }
+    p0 = lifetime.pending()
     ranked = distributed_rank(
         df, "k", "rank", num_partitions=num_partitions, hex_key=True
     )
     got = {r["k"]: r["rank"] for r in ranked.collect()}
-    assert ranked._rank_cache is None
+    assert lifetime.pending() == p0
     assert got == expect
 
 
@@ -189,9 +197,10 @@ def test_hex_key_running_total_matches_global_window(spark):
             ),
         ).collect()
     }
+    p0 = lifetime.pending()
     got_df = distributed_running_total(
         df, "k", "sz", "tot", num_partitions=16, hex_key=True
     )
     got = {r["k"]: r["tot"] for r in got_df.collect()}
-    assert got_df._rank_cache is None
+    assert lifetime.pending() == p0
     assert got == expect

@@ -14,7 +14,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
-from kapra_timeseries_anonymization_spark.plans.lifetime import release_all
+from kapra_timeseries_anonymization_spark.plans import lifetime
 from kapra_timeseries_anonymization_spark.queries import REGISTRY
 from kapra_timeseries_anonymization_spark.session import build_session
 from kapra_timeseries_anonymization_spark.sources.tables import TABLES
@@ -51,12 +51,11 @@ def main():
         if only and name not in only:
             continue
         try:
-            sdf = fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
-            # release pipeline caches/checkpoints registered with the
-            # session lifetime registry (r05; see plans/lifetime.py)
-            release_all()
+            # releases what the query registered once it is collected
+            with lifetime.scope():
+                sdf = fn(spark, sf_dir)
+                scols = sdf.columns
+                srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:
             print(f"FAIL {name}: spark error {type(e).__name__}: {e}")
             n_fail += 1
